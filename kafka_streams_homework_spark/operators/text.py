@@ -784,9 +784,6 @@ def bpe_train_merges(
     vocabulary runs out of pairs; both engines degrade identically.
     """
     spark = words.sparkSession
-    sym_arr = F.expr(
-        "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-    )
     # r12 (guide §1.2/§7.3): the merge loop is DRIVER-LATENCY bound —
     # every per-step action runs over the vocabulary-sized segmentation
     # (a few hundred k rows), but under AQE each action decomposes into

@@ -19,6 +19,10 @@ Scale notes: the stream side never shuffles for the dimension join
 (broadcast); the windowed agg shuffles on (key, window) with partial
 aggregation per micro-batch; state store backend should be RocksDB
 (`spark.sql.streaming.stateStore.providerClass`) for large key spaces.
+Checkpoint and state files go through the FileSystem-based checkpoint
+manager (session.RUNTIME_CONFS), because the default FileContext one
+forks a `readlink` per file on the local file system and that set the
+per-micro-batch floor.
 """
 
 from __future__ import annotations

@@ -864,3 +864,137 @@ def test_ohlc_stream_state_is_merge_order_safe(spark, tmp_path):
     multi = run({"maxFilesPerTrigger": 1})
     single = run({})
     assert multi == single == (500.0, 900.0, 50.0, 200.0, 5)
+
+
+CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def test_checkpoint_manager_restart_matches_one_run(spark, tmp_path, dim):
+    """Checkpoints are written through the FileSystem-based checkpoint
+    manager that session.RUNTIME_CONFS selects. A stream stopped after
+    its first micro-batch and restarted from the same checkpoint must
+    upsert to the table of one availableNow run, and the checkpoint must
+    keep every checksum file. If a Spark release moves the class, the
+    stream start fails here with ClassNotFound instead of quietly falling
+    back to the default manager."""
+    import glob
+    import os
+    import time
+
+    from kafka_streams_homework_spark.session import (
+        RUNTIME_CONFS,
+        apply_runtime_confs,
+        get_spark,
+    )
+
+    manager = RUNTIME_CONFS[CKPT_MANAGER_KEY]
+    assert manager.endswith(".FileSystemBasedCheckpointFileManager")
+    assert get_spark().conf.get(CKPT_MANAGER_KEY) == manager
+    # a clone inherits the launch confs, so drop the key to stand in for
+    # a session built outside get_spark
+    vanilla = spark.newSession()
+    vanilla.conf.unset(CKPT_MANAGER_KEY)
+    assert vanilla.conf.get(CKPT_MANAGER_KEY, None) is None
+    assert apply_runtime_confs(vanilla).conf.get(CKPT_MANAGER_KEY) == manager
+
+    path = _write_events(
+        spark,
+        tmp_path,
+        [
+            [(1, ts(5, 10), 100.0), (2, ts(5, 20), 60.0)],
+            [(1, ts(5, 30), 40.0), (2, ts(6, 0), 30.0)],
+            [(1, ts(6, 10), 70.0), (2, ts(5, 50), 5.0)],
+        ],
+    )
+    ckpt = str(tmp_path / "ckpt")
+    table: dict[tuple, float] = {}
+    batch_ids: list[int] = []
+
+    def alerts():
+        return price_alerts_stream(
+            _stream(spark, path), dim, mode="update", threshold=0.0
+        )
+
+    def upsert(batch_df, batch_id):
+        batch_ids.append(batch_id)
+        for r in batch_df.collect():
+            table[(r.alert_key, r.window_start)] = r.total_sum_per_minute
+
+    def start(**trigger):
+        return (
+            alerts()
+            .writeStream.foreachBatch(upsert)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(**trigger)
+            .start()
+        )
+
+    # run 1: batch 0 runs at start and the next trigger is an hour away;
+    # progress is posted only after the batch's commit-log entry
+    q = start(processingTime="1 hour")
+    deadline = time.monotonic() + 120
+    while q.lastProgress is None:
+        if not q.isActive:
+            q.awaitTermination()  # raises the query's error
+        assert time.monotonic() < deadline, "first micro-batch never committed"
+        time.sleep(0.1)
+    q.stop()
+    assert batch_ids == [0]
+    # run 2 resumes from the checkpoint: no batch replays
+    assert start(availableNow=True).awaitTermination(300), "restart never ended"
+    assert batch_ids == [0, 1, 2]
+
+    once = run_upsert(spark, alerts(), ["alert_key", "window_start"]).collect()
+    assert table == {
+        (r.alert_key, r.window_start): r.total_sum_per_minute for r in once
+    }
+    assert table == {
+        ("1", ts(5)): 140.0,
+        ("1", ts(6)): 70.0,
+        ("2", ts(5)): 65.0,
+        ("2", ts(6)): 30.0,
+    }
+
+    # Hadoop's .N.crc beside every offset and commit file
+    for log in ("offsets", "commits"):
+        names = set(os.listdir(os.path.join(ckpt, log)))
+        for n in batch_ids:
+            assert {str(n), f".{n}.crc"} <= names, (log, n, sorted(names))
+    # state deltas (version = batch id + 1) keep Hadoop's .N.delta.crc and
+    # Spark's own N.delta.crc
+    parts = glob.glob(os.path.join(ckpt, "state", "0", "[0-9]*"))
+    assert parts
+    for part in parts:
+        names = set(os.listdir(part))
+        for v in range(1, len(batch_ids) + 1):
+            want = {f"{v}.delta", f".{v}.delta.crc", f"{v}.delta.crc"}
+            assert want <= names, (part, v, sorted(names))
+
+
+def test_apply_runtime_confs_warns_on_rejected_conf():
+    """A conf the session refuses is a warning that names the key, not a
+    silent skip."""
+    import types
+
+    from kafka_streams_homework_spark.session import (
+        RUNTIME_CONFS,
+        apply_runtime_confs,
+    )
+
+    class _RejectingConf:
+        def set(self, key, value):
+            raise RuntimeError(f"cannot modify {key}")
+
+        def get(self, key, default=None):
+            return "200"
+
+    session = types.SimpleNamespace(
+        conf=_RejectingConf(),
+        sparkContext=types.SimpleNamespace(defaultParallelism=4),
+    )
+    with pytest.warns(RuntimeWarning) as caught:
+        apply_runtime_confs(session)
+    messages = [str(w.message) for w in caught]
+    for key in [*RUNTIME_CONFS, "spark.sql.shuffle.partitions"]:
+        assert any(key in m for m in messages), key

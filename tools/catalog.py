@@ -7,9 +7,11 @@ after adding queries: python tools/catalog.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from kafka_streams_homework_spark.queries import REGISTRY, WINDOW  # noqa: E402
 
@@ -32,9 +34,10 @@ def main() -> None:
         desc = " ".join(spec.description.split())
         lines.append(f"| {i} | `{name}` | {check} | {desc} |")
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/QUERIES.md", "w") as f:
+    path = os.path.join(ROOT, "QUERIES.md")
+    with open(path, "w") as f:
         f.write(out)
-    print(f"wrote /root/repo/QUERIES.md ({len(REGISTRY)} queries)")
+    print(f"wrote {path} ({len(REGISTRY)} queries)")
 
 
 if __name__ == "__main__":

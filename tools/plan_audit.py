@@ -13,10 +13,12 @@ Usage: python tools/plan_audit.py [sf_dir] [out_md]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from kafka_streams_homework_spark import queries as Q  # noqa: E402
 from kafka_streams_homework_spark.session import get_spark  # noqa: E402
@@ -163,7 +165,7 @@ def summarize(plan: str) -> dict[str, object]:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out_md = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/PLANS.md"
+    out_md = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "PLANS.md")
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -18,7 +18,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_streams_homework_spark import queries as Q  # noqa: E402
 from kafka_streams_homework_spark.caching import release_caches  # noqa: E402

@@ -36,7 +36,7 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_streams_homework_spark import queries as Q  # noqa: E402
 from kafka_streams_homework_spark.session import get_spark  # noqa: E402

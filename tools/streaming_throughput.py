@@ -19,10 +19,11 @@ input. Usage:
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_streams_homework_spark import queries as Q
 from kafka_streams_homework_spark.session import get_spark
