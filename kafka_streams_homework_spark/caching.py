@@ -18,6 +18,8 @@ them at the end of the pipeline run.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
@@ -87,8 +89,13 @@ def release_caches() -> int:
     for fn in _ON_RELEASE:
         try:
             fn()
-        except Exception:
-            pass
+        except Exception as e:  # one failing callback must not skip the rest
+            warnings.warn(
+                f"release_caches: on-release callback "
+                f"{getattr(fn, '__qualname__', fn)!s} failed: {e!r}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     n = len(_TRACKED) + len(_TRACKED_CKPTS)
     for df in _TRACKED:
         try:

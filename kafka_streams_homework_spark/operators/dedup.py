@@ -109,9 +109,12 @@ def exact_dup_groups_normalized(documents: DataFrame) -> DataFrame:
 # Per-run substrate memo (r11 ADVICE): checkpointing lost CacheManager's
 # canonicalized-plan dedup, so a query that builds the substrate twice
 # (the jaccard-vs-minhash comparison query) materialized two independent
-# copies. Memoized per (input-plan semantic hash, n); cleared by every
-# caching.release_caches() so a memo can never outlive its blocks.
-_SUBSTRATE_MEMO: dict[tuple, DataFrame] = {}
+# copies. Bucketed per (input-plan semantic hash, n) -> (input frame,
+# substrate); the 32-bit hash can collide, so a hit also needs the
+# stored input to be semantically the same plan on the same session.
+# Cleared by every caching.release_caches() so a memo can never outlive
+# its blocks.
+_SUBSTRATE_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 on_release(_SUBSTRATE_MEMO.clear)
 
@@ -146,14 +149,18 @@ def _doc_shingle_hashes(documents: DataFrame, n: int) -> DataFrame:
     except Exception:  # pragma: no cover - e.g. Connect sessions
         key = None
     if key is not None and key in _SUBSTRATE_MEMO:
-        return _SUBSTRATE_MEMO[key]
+        stored, substrate = _SUBSTRATE_MEMO[key]
+        if stored.sparkSession is documents.sparkSession and stored.sameSemantics(
+            documents
+        ):
+            return substrate
     out = tracked_checkpoint(
         spread(documents.select("doc_id", "text"))
         .select("doc_id", shingle_hashes(tokens("text"), n).alias("hs"))
         .select("doc_id", "hs", F.size("hs").alias("n_sh"))
     ).filter(F.col("n_sh") > 0)
     if key is not None:
-        _SUBSTRATE_MEMO[key] = out
+        _SUBSTRATE_MEMO[key] = (documents, out)
     return out
 
 

@@ -39,7 +39,7 @@ from kafka_streams_homework_spark.caching import (
     tracked_persist,
 )
 from kafka_streams_homework_spark.session import apply_runtime_confs
-from kafka_streams_homework_spark.sources.batch import load_table, spread
+from kafka_streams_homework_spark.sources.batch import load_table, parquet_schema, spread
 from kafka_streams_homework_spark.sources.sink import (
     write_and_read_back,
     write_parquet,
@@ -139,7 +139,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     a directory layout — that is why this helper exists.
     """
     path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = parquet_schema(spark, path)
     reader = spark.readStream.schema(raw_schema)
     if os.path.isdir(path):
         stream = reader.parquet(path)
@@ -157,7 +157,7 @@ def _emb_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same layout-agnostic file/directory handling as
     ``_events_stream``."""
     path = os.path.join(sf_dir, "embeddings.parquet")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = parquet_schema(spark, path)
     reader = spark.readStream.schema(raw_schema)
     if os.path.isdir(path):
         return reader.parquet(path)
@@ -171,7 +171,7 @@ def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines, not as batch afterthoughts). Same layout-agnostic
     file/directory handling as ``_events_stream``."""
     path = os.path.join(sf_dir, "documents.parquet")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = parquet_schema(spark, path)
     reader = spark.readStream.schema(raw_schema)
     if os.path.isdir(path):
         return reader.parquet(path)

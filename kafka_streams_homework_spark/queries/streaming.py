@@ -509,12 +509,15 @@ def q_streaming_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame
                 )
         else:
             shutil.copy(src, _os.path.join(staged, "0000_events.parquet"))
-        raw_schema = spark.read.parquet(src).schema
+        raw_schema = parquet_schema(spark, src)
         ts_is_ns = dict(
             (f.name, f.dataType.simpleString()) for f in raw_schema.fields
         ).get("ts") == "bigint"
         max_ts = (
-            spark.read.parquet(src).agg(F.max("ts").alias("m")).collect()[0]["m"]
+            spark.read.schema(raw_schema)
+            .parquet(src)
+            .agg(F.max("ts").alias("m"))
+            .collect()[0]["m"]
         )
         far_future = (
             max_ts + 365 * 86400 * 10**9
@@ -705,6 +708,8 @@ def q_avro_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow-batched Avro codec otherwise serializes on the one-split scan.
     events = spread(_t(spark, sf_dir, "events").select("user_id", "ts", "value"))
     customer = _t(spark, sf_dir, "customer")
+    # avro_encode_column is nondeterministic: Project/Filter only, never
+    # a join key, grouping key or pushed filter (see its docstring).
     wire = events.select(
         F.col("user_id").cast("string").cast("binary").alias("key"),
         F.concat(
@@ -831,6 +836,8 @@ def q_avro_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread first (r12, guide §2.5): see q_kafka_wire_roundtrip.
     events = spread(_t(spark, sf_dir, "events").select("user_id", "ts", "value"))
     customer = _t(spark, sf_dir, "customer")
+    # avro_encode_column is nondeterministic: Project/Filter only, never
+    # a join key, grouping key or pushed filter (see its docstring).
     wire = events.select(
         avro_encode_column(
             F.struct("user_id", "ts", "value"), AVRO_PURCHASE_SCHEMA

@@ -251,7 +251,15 @@ def avro_decode_column(value, schema_json: str):
 
 def avro_encode_column(struct_col, schema_json: str):
     """``to_avro`` twin: struct column → Avro-binary column (test/sink
-    side of the round-trip)."""
+    side of the round-trip).
+
+    The returned column is marked nondeterministic (see below), so it
+    is usable only in a Project (select/withColumn) or a Filter. Never
+    make it a join key or a grouping key, and never rely on a filter on
+    it being pushed into a scan: Spark's analyzer rejects
+    nondeterministic expressions outside Project/Filter with an
+    AnalysisException or moves them, and never pushes them down. Join
+    or group on the projected frame's other columns instead."""
     from pyspark.sql.functions import pandas_udf
 
     fields = parse_schema(schema_json)

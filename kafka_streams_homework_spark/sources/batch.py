@@ -10,14 +10,29 @@ pushes filters/projections into the scan (check ``PushedFilters`` /
 Scale note (100 TB): parquet scans parallelize by row-group;
 ``spark.sql.files.maxPartitionBytes`` (default 128 MB) controls split
 size. Nothing here collects to the driver.
+
+Scale note (schema inference): every ``spark.read.parquet(path)``
+without a schema runs one Spark job to read parquet footers and infer
+the schema (measured on a 4-vCPU VM at sf0.1: a median 79-97 ms per
+call, against 11-13 ms with the schema given). ``parquet_schema``
+memoizes that inference per local path, file listing and
+schema-affecting conf, so a repeat load of an unchanged table plans
+with no job. A path the driver cannot stat (a URI with a scheme, an
+object store, a glob) still infers on every call.
 """
 
 from __future__ import annotations
 
+import copy
 import os
+import stat
+import threading
+from collections import OrderedDict
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -41,6 +56,71 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
 
+# The confs Spark's parquet footer-to-schema conversion and schema merge
+# read: the same bytes infer a different schema when any of them differs.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+_SCHEMA_MEMO_SIZE = 64
+# (absolute path, conf values) -> (file stamps, schema); oldest dropped first
+_SCHEMA_MEMO: OrderedDict[tuple, tuple] = OrderedDict()
+_SCHEMA_LOCK = threading.Lock()
+
+
+def _file_stamps(path: str) -> tuple | None:
+    """Sorted (relative name, size, st_mtime_ns) of every file at or
+    under a local ``path`` — what Spark's file index compares — or None
+    when the driver cannot stat it (a URI with a scheme, a glob, a
+    missing path). Hidden and ``_``-prefixed files are included: they
+    can only add re-inferences, never hide a change."""
+    if urlsplit(path).scheme:
+        return None
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns),)
+        stamps = []
+        for root, _dirs, files in os.walk(path, followlinks=True):
+            for f in files:
+                full = os.path.join(root, f)
+                fs = os.stat(full)
+                stamps.append((os.path.relpath(full, path), fs.st_size, fs.st_mtime_ns))
+    except OSError:  # missing, or a file vanished mid-walk
+        return None
+    return tuple(sorted(stamps))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Spark's own inferred schema of a parquet file or directory,
+    inferred again only when the path, its files (name, size, mtime) or
+    a schema-affecting conf (``_SCHEMA_CONFS``) changed. Returns a copy,
+    so a caller that mutates it cannot alter the memo."""
+    # stamps are taken BEFORE inference: a file that changes in between
+    # leaves stale stamps next to a newer schema, which the next call's
+    # stamps no longer match — it re-infers rather than reusing
+    stamps = _file_stamps(path)
+    if stamps is None:
+        return spark.read.parquet(path).schema
+    key = (os.path.abspath(path), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    with _SCHEMA_LOCK:
+        hit = _SCHEMA_MEMO.get(key)
+    if hit is not None and hit[0] == stamps:
+        return copy.deepcopy(hit[1])
+    schema = spark.read.parquet(path).schema
+    with _SCHEMA_LOCK:
+        _SCHEMA_MEMO.pop(key, None)
+        _SCHEMA_MEMO[key] = (stamps, schema)
+        while len(_SCHEMA_MEMO) > _SCHEMA_MEMO_SIZE:
+            _SCHEMA_MEMO.popitem(last=False)
+    return copy.deepcopy(schema)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Declarative — pushdown/pruning happen later.
 
@@ -49,7 +129,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     microsecond TimestampType here so downstream operators see a real
     event-time column.
     """
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # integer division — ns epochs exceed double's 53-bit mantissa
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -8,11 +8,17 @@ the real views — no execution) and pin the flagship schema.
 
 from __future__ import annotations
 
+import uuid
+
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.types import BinaryType, StringType
 
 import __spark_entry__ as E
-from kafka_streams_homework_spark.sources.batch import TABLES
+from kafka_streams_homework_spark import caching
+from kafka_streams_homework_spark.sources.batch import TABLES, load_table
 
 
 @pytest.fixture(scope="module")
@@ -125,3 +131,89 @@ def test_entry_schema_is_stable(spark):
     assert kinds["alert_key"] == "string"
     assert kinds["window_start"] == "timestamp"
     assert kinds["total_sum_per_minute"] == "double"
+
+
+def _jobs_run_by(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_an_unchanged_schema_once(spark, tmp_path):
+    pq.write_table(
+        pa.table({"k": [1, 2, 3], "v": ["a", "b", "c"]}), tmp_path / "t.parquet"
+    )
+
+    def load():
+        return load_table(spark, str(tmp_path), "t")
+
+    first, n_first = _jobs_run_by(spark, load)
+    second, n_second = _jobs_run_by(spark, load)
+    assert n_first >= 1  # the inference job: the counter sees it
+    assert n_second == 0
+    bare = spark.read.parquet(str(tmp_path / "t.parquet"))
+    assert second.schema == first.schema == bare.schema
+    assert sorted(second.collect()) == sorted(first.collect()) == sorted(bare.collect())
+
+
+def test_load_table_sees_a_rewritten_file(spark, tmp_path):
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"k": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["k"]
+    pq.write_table(pa.table({"k": [1, 2], "w": [10.5, 20.5]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["k", "w"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, 10.5), (2, 20.5)]
+
+
+def test_load_table_sees_a_part_file_added_to_a_directory(spark, tmp_path):
+    table = tmp_path / "t.parquet"
+    table.mkdir()
+    pq.write_table(pa.table({"k": [1, 2, 3]}), table / "part-0.parquet")
+    assert load_table(spark, str(tmp_path), "t").count() == 3
+    _, n_jobs = _jobs_run_by(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    assert n_jobs == 0
+    pq.write_table(pa.table({"k": [4, 5]}), table / "part-1.parquet")
+    df = load_table(spark, str(tmp_path), "t")
+    assert sorted(r.k for r in df.collect()) == [1, 2, 3, 4, 5]
+
+
+def test_load_table_follows_binary_as_string(spark, tmp_path):
+    pq.write_table(
+        pa.table({"b": pa.array([b"x", b"y"], pa.binary())}), tmp_path / "t.parquet"
+    )
+    key = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        df = load_table(spark, str(tmp_path), "t")
+        assert df.schema["b"].dataType == BinaryType()
+        spark.conf.set(key, "true")
+        df = load_table(spark, str(tmp_path), "t")
+        assert df.schema["b"].dataType == StringType()
+        assert sorted(r.b for r in df.collect()) == ["x", "y"]
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_release_caches_warns_on_a_failing_callback_and_continues(monkeypatch):
+    ran = []
+
+    def _broken_memo_clear():
+        raise ValueError("boom")
+
+    monkeypatch.setattr(
+        caching, "_ON_RELEASE", [_broken_memo_clear, lambda: ran.append(1)]
+    )
+    monkeypatch.setattr(caching, "_TRACKED", [])
+    monkeypatch.setattr(caching, "_TRACKED_CKPTS", [])
+    with pytest.warns(RuntimeWarning, match="_broken_memo_clear.*boom"):
+        caching.release_caches()
+    assert ran == [1]

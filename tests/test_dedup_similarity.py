@@ -476,3 +476,21 @@ def test_mmr_rerank_matches_python_greedy_replay(spark, sf_dir):
                     best = (key, nid)
             sel.append(best[1])
             assert out[(qid, t)] == best[1], (qid, t, sel, out)
+
+
+def test_shingle_substrate_memo_survives_a_hash_collision(spark, monkeypatch):
+    """The memo key is a 32-bit semanticHash; two different inputs that
+    collide must each get their own substrate."""
+    schema = "doc_id long, text string"
+    a = spark.createDataFrame([(1, "the quick brown fox jumps")], schema)
+    b = spark.createDataFrame([(2, "over the lazy dog once more")], schema)
+    monkeypatch.setattr(D, "_SUBSTRATE_MEMO", {})
+    # the session's concrete DataFrame class, which defines semanticHash
+    monkeypatch.setattr(type(a), "semanticHash", lambda self: 7)
+    assert a.semanticHash() == b.semanticHash()
+    sa = D._doc_shingle_hashes(a, 3)
+    sb = D._doc_shingle_hashes(b, 3)
+    assert sb is not sa
+    assert [r.doc_id for r in sb.collect()] == [2]
+    assert [r.doc_id for r in sa.collect()] == [1]
+    assert D._doc_shingle_hashes(b, 3) is sb  # a true hit still reuses
