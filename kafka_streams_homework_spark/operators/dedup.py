@@ -445,18 +445,6 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    documents: DataFrame, n: int = 3, num_hashes: int = 32
-) -> DataFrame:
-    """k-min MinHash signature per document, entirely in SQL.
-
-    h_i(shingle) = xxhash64(shingle_hash, seed=i); signature[i] = min
-    over the doc's shingles. One narrow projection per doc — array_min
-    over a transform — no extra shuffle for signature computation.
-    """
-    return _minhash_sigs(_doc_shingle_hashes(documents, n), num_hashes)
-
-
 def _minhash_sigs(sh: DataFrame, num_hashes: int) -> DataFrame:
     sig = F.array(
         *[

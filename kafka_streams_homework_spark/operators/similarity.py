@@ -438,34 +438,6 @@ def cosine_pairs_within_label(
     )
 
 
-def _hyperplane_signature(emb, planes) -> "F.Column":
-    """array<int> of sign bits: 1 if dot(emb, h_j) >= 0 else 0.
-
-    `planes` is a Python list of hyperplane vectors baked into the plan
-    as literals — nbits × dim doubles, a bounded constant independent of
-    corpus size — so the signature is one narrow JVM-side projection
-    (zip_with/aggregate), no shuffle, no Python in the row path.
-    """
-    # ONE nested higher-order expression over an array-of-arrays
-    # literal — not nbits separate aggregate expressions (the unrolled
-    # form built a ~nbits*dim-node tree: seconds of analysis before a
-    # row moved). The matrix literal itself is ONE F.expr parse, not
-    # nbits*dim F.lit() Column constructions — each F.lit is a py4j
-    # round-trip, and 8 192 of them cost ~15 s of pure driver-side
-    # chatter (measured; the expr parse: milliseconds). repr() emits
-    # the shortest exact round-trip decimal and the 'D' suffix forces
-    # DOUBLE, so the parsed values are bit-identical to the floats.
-    mat = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{float(x)!r}D" for x in h) + ")"
-            for h in planes
-        )
-        + ")"
-    )
-    return _hyperplane_signature_col(emb, mat)
-
-
 def _hyperplane_signature_col(emb, mat) -> "F.Column":
     """Signature from a matrix COLUMN (array<array<double>>): the
     nbits dot products as one nested higher-order expression. Callers
@@ -1259,27 +1231,6 @@ def _pq_encode_nested(embeddings: DataFrame, nested: list) -> DataFrame:
 
     return embeddings.select("vec_id", "embedding").mapInPandas(
         encode, out_schema
-    )
-
-
-def _pq_encode_joined(embeddings: DataFrame, codebook: DataFrame, m: int = 16) -> DataFrame:
-    """The explode-join twin of pq_encode (kept for plan comparison):
-    subvectors ⋈ broadcast(codebook), argmin L2 per (vec_id, sub),
-    codes collected in subspace order — two shuffles of (vec_id, sub,
-    code) rows."""
-    subs = _subvectors(embeddings, m)
-    return (
-        subs.join(F.broadcast(codebook), "sub")
-        .withColumn("d", _l2(F.col("subvec"), F.col("centroid")))
-        .groupBy("vec_id", "sub")
-        .agg(F.min(F.struct(F.col("d"), F.col("code"))).alias("b"))
-        .groupBy("vec_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("sub"), F.col("b.code").alias("code")))
-            ).alias("sc")
-        )
-        .select("vec_id", F.transform("sc", lambda s: s["code"]).alias("codes"))
     )
 
 

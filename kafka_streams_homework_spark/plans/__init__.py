@@ -16,10 +16,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
@@ -36,11 +32,3 @@ def count_exchanges(df: DataFrame) -> int:
 
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df) or "BroadcastNestedLoopJoin" in physical_plan(df)
-
-
-def scan_read_schema(df: DataFrame, table_hint: str = "") -> str:
-    """The ReadSchema fragments of parquet scans (column pruning check)."""
-    plan = formatted_plan(df)
-    return "\n".join(
-        line.strip() for line in plan.splitlines() if "ReadSchema" in line and table_hint in line
-    )

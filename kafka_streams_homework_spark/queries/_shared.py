@@ -103,18 +103,36 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _stream_session(spark: SparkSession, partitions: int = 8) -> SparkSession:
+def _stream_session(spark: SparkSession, partitions: int = 4) -> SparkSession:
     """Session clone with state-volume-sized shuffle partitions for
-    stateful streaming queries (r12 rollout of the r9 sessionize
-    finding): every stateful operator opens one state-store instance
-    per shuffle partition PER MICRO-BATCH, and at 32 partitions the
-    open/commit overhead dominates an availableNow run (isolated A/B
-    on the session-window agg: 7.1 s at 32 -> 2.2 s at 8 -> 1.9 s at
-    4, identical rows). The count is a deployment knob pinned into the
-    checkpoint at first start — size it to STATE VOLUME (fixture state
-    is 1e2..1e5 keys), not core count; a 100 TB stream sizes it up.
-    Partitioning never changes aggregation/state results — it only
-    changes which instance holds which key group.
+    stateful streaming queries; every stateful stream in the package
+    and the live benchmark pipeline build their plan on it, so this
+    default is the one definition of their state layout.
+
+    Every stateful operator opens one state-store instance per shuffle
+    partition PER MICRO-BATCH, and each instance commits its own delta
+    file plus three checksum files. Measured:
+    - r12, 32 cores, availableNow session-window agg (isolated A/B,
+      identical rows): 7.1 s at 32 partitions -> 2.2 s at 8 -> 1.9 s
+      at 4.
+    - 4 vCPUs, the live ``alerts-live`` benchmark stream: 8 -> 4
+      partitions halves the state files per micro-batch (32 -> 16),
+      runs the state tasks in one wave instead of two, and moves the
+      median alert latency 542 -> 476 ms and 522 -> 456 ms (two sets
+      of ten alternating runs each; per micro-batch, one traced pair:
+      12.6 -> 8.1 tasks, task time 337 -> 185 ms, state commit p50
+      17 -> 8 ms).
+    - Fewer is not better: at 2 partitions the stream-stream joins
+      slow down (4 vCPUs, sf0.1, min of 3, two rounds: rate gate
+      2.4-2.6 s at 4 -> 3.1-3.4 s at 2; the two interval joins and
+      the rate gate together 6.4-7.2 s -> 7.8 s).
+
+    The count is pinned into the checkpoint's offset log at first
+    start, so a restarted stream keeps the count it began with. Size
+    it to STATE VOLUME (fixture state is 1e2..1e5 keys), not core
+    count; a 100 TB stream sizes it up. Partitioning never changes
+    aggregation/state results — it only changes which instance holds
+    which key group (tests/test_streaming.py checks 1, 4 and 8).
 
     ``spark.newSession()`` scoping (ADVICE r9): the clone shares the
     SparkContext but owns its SQLConf, so a concurrent query on the

@@ -448,14 +448,14 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_partitioned_sink_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _t(spark, sf_dir, "events")
     path = f"{SINK_ROOT}/events_by_day_{os.path.basename(sf_dir.rstrip('/'))}"
-    write_parquet(
-        events.withColumn("event_date", F.to_date("ts")),
-        path,
-        partition_by=["event_date"],
-    )
+    by_day = events.withColumn("event_date", F.to_date("ts"))
+    write_parquet(by_day, path, partition_by=["event_date"])
     lo, hi = F.lit("2024-01-08").cast("date"), F.lit("2024-01-15").cast("date")
+    # Read back with the written schema (partition column last, as the
+    # partitioned read lays it out): no schema-inference job.
     return (
-        spark.read.parquet(path)
+        spark.read.schema(by_day.schema)
+        .parquet(path)
         .filter((F.col("event_date") >= lo) & (F.col("event_date") < hi))
         .groupBy("event_date")
         .agg(
@@ -1125,8 +1125,10 @@ def q_clustered_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _t(spark, sf_dir, "events")
     path = f"{SINK_ROOT}/events_clustered"
     write_clustered(events, path, ["user_id", "ts"], n_files=16)
+    # the writer keeps the frame's columns: read back with its schema
     return (
-        spark.read.parquet(path)
+        spark.read.schema(events.schema)
+        .parquet(path)
         .filter(F.col("user_id").between(10, 20))
         .groupBy("user_id")
         .agg(
@@ -1421,8 +1423,10 @@ def q_zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _t(spark, sf_dir, "events")
     path = f"{SINK_ROOT}/events_zordered"
     write_zordered(events, path, "user_id", "value", bits=10, n_files=16)
+    # the writer drops its z helper column: read back with the frame's schema
     return (
-        spark.read.parquet(path)
+        spark.read.schema(events.schema)
+        .parquet(path)
         .filter(F.expr(ZORDER_BOX))
         .select("event_id", "user_id", "value")
     )

@@ -189,8 +189,8 @@ def q_streaming_stateful_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     apply_runtime_confs(spark)
-    # _stream_session (r12): ~1.5k live (user, window) groups — 8
-    # state-store instances ample; see _shared.py rationale
+    # _stream_session (r12): ~1.5k live (user, window) groups — a few
+    # state-store instances are ample; see _shared.py rationale
     qs = _stream_session(spark)
     stream = _events_stream(qs, sf_dir)
     alerts = windowed_sum_stateful(
@@ -479,21 +479,11 @@ def q_streaming_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame
     #    makes it the later micro-batch.
     # 2. State-partition right-sizing: the session-window aggregation
     #    opens one state-store instance per shuffle partition PER
-    #    MICRO-BATCH; at 32 partitions x 3 batches the open/commit
-    #    overhead dominates the stream phase (7.1 s -> 2.2 s at 8
-    #    partitions, same rows). The count is a deployment knob
-    #    pinned by the checkpoint at first start — size it to state
-    #    volume (~100k sessions here), not the CPU count; a 100 TB
-    #    stream sizes it up, this fixture sizes it down.
-    #    Scoped via spark.newSession() (ADVICE r9): the clone shares
-    #    the SparkContext but owns its SQLConf, so a concurrent query
-    #    on the caller's session can never inherit the reduced
-    #    parallelism (the old session-global set/finally-restore was
-    #    not interleaving-safe). The stream plan is built on the
-    #    clone; the collected result frame is handed back on the
-    #    caller's session.
-    qs = apply_runtime_confs(spark.newSession())
-    qs.conf.set("spark.sql.shuffle.partitions", "8")
+    #    MICRO-BATCH, so the stream plan is built on the
+    #    ``_stream_session`` clone (layout and measurements in
+    #    _shared.py); the collected result frame is handed back on
+    #    the caller's session.
+    qs = _stream_session(spark)
     try:
         src = _os.path.join(sf_dir, "events.parquet")
         if _os.path.isdir(src):
@@ -2113,7 +2103,8 @@ def q_streaming_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     apply_runtime_confs(spark)
     # _stream_session (r12): state here is the 2048-cell counter
-    # matrix — 8 state-store instances ample; see _shared.py rationale
+    # matrix — a few state-store instances are ample; see _shared.py
+    # rationale
     qs = _stream_session(spark)
     stream = _events_stream(qs, sf_dir)
     js = qs.createDataFrame(

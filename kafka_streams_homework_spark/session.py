@@ -69,8 +69,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # Write offset, commit and state-store files through the Hadoop
     # FileSystem API instead of the default FileContext one. On the local
     # file system FileContext.rename forks `readlink` for every file and
-    # its .crc sibling; with 8 state partitions that set the micro-batch
-    # floor (state-store commit p50 544 ms -> 14 ms on a 4-vCPU box).
+    # its .crc sibling, which set the micro-batch floor (state-store
+    # commit p50 544 ms -> 14 ms on a 4-vCPU box, measured with the 8
+    # state partitions streams then ran on).
     # Spark already picks this manager for any file system without an
     # AbstractFileSystem; local rename is an atomic POSIX rename, and the
     # checksum files are still written. Spark 4.1 package path: if a

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import json
 import struct as _struct
-from typing import Any, Callable, Iterator
+from typing import Any
 
 import pandas as pd
 
@@ -278,11 +278,6 @@ def avro_encode_column(struct_col, schema_json: str):
     # function is in fact deterministic; the flag only pins its plan
     # position.
     return _encode.asNondeterministic()(struct_col)
-
-
-def make_decoder(schema_json: str) -> Callable[[bytes], dict[str, Any]]:
-    fields = parse_schema(schema_json)
-    return lambda b: decode_record(fields, b)
 
 
 # ---------------------------------------------------------------------------

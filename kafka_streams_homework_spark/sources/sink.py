@@ -27,9 +27,13 @@ def write_parquet(
 
 
 def write_and_read_back(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
-    """Round-trip a result through the parquet sink (proves S5/S6)."""
+    """Round-trip a result through the parquet sink (proves S5/S6).
+
+    Reads back with the written frame's own schema: a bare read would
+    run one schema-inference job per call for a schema already known.
+    """
     write_parquet(df, path)
-    return spark.read.parquet(path)
+    return spark.read.schema(df.schema).parquet(path)
 
 
 def compact_parquet(

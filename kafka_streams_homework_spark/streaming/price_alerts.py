@@ -22,7 +22,12 @@ aggregation per micro-batch; state store backend should be RocksDB
 Checkpoint and state files go through the FileSystem-based checkpoint
 manager (session.RUNTIME_CONFS), because the default FileContext one
 forks a `readlink` per file on the local file system and that set the
-per-micro-batch floor.
+per-micro-batch floor. State layout: every stateful stream runs on
+`queries._stream_session` (4 shuffle partitions = 4 state-store
+instances per stateful operator per micro-batch, each committing a
+delta and three checksum files); a checkpoint keeps the count it was
+started with, and a stream whose state outgrows a few instances needs
+a larger count from its first start.
 """
 
 from __future__ import annotations

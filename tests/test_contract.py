@@ -19,6 +19,7 @@ from pyspark.sql.types import BinaryType, StringType
 import __spark_entry__ as E
 from kafka_streams_homework_spark import caching
 from kafka_streams_homework_spark.sources.batch import TABLES, load_table
+from kafka_streams_homework_spark.sources.sink import write_and_read_back, write_parquet
 
 
 @pytest.fixture(scope="module")
@@ -161,6 +162,22 @@ def test_load_table_infers_an_unchanged_schema_once(spark, tmp_path):
     bare = spark.read.parquet(str(tmp_path / "t.parquet"))
     assert second.schema == first.schema == bare.schema
     assert sorted(second.collect()) == sorted(first.collect()) == sorted(bare.collect())
+
+
+def test_write_and_read_back_runs_no_schema_inference_job(spark, tmp_path):
+    """The sink round trip reads back with the written frame's schema, so
+    it starts exactly the jobs of the write alone."""
+    df = spark.createDataFrame(
+        [(1, "a", 2.5), (2, "b", None), (3, None, -1.0)], "k long, s string, x double"
+    )
+    _, n_write = _jobs_run_by(spark, lambda: write_parquet(df, str(tmp_path / "w")))
+    back, n_round_trip = _jobs_run_by(
+        spark, lambda: write_and_read_back(df, spark, str(tmp_path / "rt"))
+    )
+    assert n_write >= 1  # the write job: the counter sees it
+    assert n_round_trip == n_write
+    assert back.schema == spark.read.parquet(str(tmp_path / "rt")).schema
+    assert sorted(back.collect()) == sorted(df.collect())
 
 
 def test_load_table_sees_a_rewritten_file(spark, tmp_path):

@@ -998,3 +998,119 @@ def test_apply_runtime_confs_warns_on_rejected_conf():
     messages = [str(w.message) for w in caught]
     for key in [*RUNTIME_CONFS, "spark.sql.shuffle.partitions"]:
         assert any(key in m for m in messages), key
+
+
+# Three one-file micro-batches touching two users and two windows. The
+# last file's user 3 event moves the watermark ("2 minutes") past both
+# windows; user 3 is not in the dimension, and its own window stays
+# open. Every row is on time, so update and append forms agree.
+_THREE_BATCHES = [
+    [(1, ts(5, 10), 100.0), (2, ts(5, 20), 60.0)],
+    [(1, ts(5, 30), 40.0), (2, ts(6, 0), 30.0), (2, ts(5, 40), 5.0)],
+    [(1, ts(6, 10), 70.0), (3, ts(20, 0), 1.0)],
+]
+_THREE_BATCH_SUMS = {
+    ("1", ts(5)): 140.0,
+    ("1", ts(6)): 70.0,
+    ("2", ts(5)): 65.0,
+    ("2", ts(6)): 30.0,
+}
+
+
+def test_results_do_not_depend_on_state_partition_count(spark, tmp_path):
+    """The state partition count only decides which state-store instance
+    holds a key group: an update-mode upsert and an append-mode stateful
+    stream, each split into several micro-batches, give the same table
+    on 1, 4 and 8 partitions."""
+    from kafka_streams_homework_spark.queries import _stream_session
+    from kafka_streams_homework_spark.streaming import run_append
+
+    path = _write_events(spark, tmp_path, _THREE_BATCHES)
+    upserted, appended = {}, {}
+    for p in (1, 4, 8):
+        qs = _stream_session(spark, p)
+        assert qs.conf.get("spark.sql.shuffle.partitions") == str(p)
+        dim = qs.createDataFrame([(1, "u1"), (2, "u2")], DIM_SCHEMA)
+        alerts = price_alerts_stream(_stream(qs, path), dim, mode="update", threshold=0.0)
+        upserted[p] = {
+            (r.alert_key, r.window_start): r.total_sum_per_minute
+            for r in run_upsert(spark, alerts, ["alert_key", "window_start"]).collect()
+        }
+        closed = windowed_sum_stateful(
+            _stream(qs, path), threshold=0.0, watermark_delay="2 minutes"
+        )
+        appended[p] = sorted(
+            (r.alert_key, r.window_start_ms, r.total_sum_per_minute)
+            for r in run_append(spark, closed).collect()
+        )
+    assert upserted[1] == upserted[4] == upserted[8] == _THREE_BATCH_SUMS
+    want = sorted(
+        (k, int(w.timestamp() * 1000), v) for (k, w), v in _THREE_BATCH_SUMS.items()
+    )
+    assert appended[1] == appended[4] == appended[8] == want
+
+
+def test_eight_partition_checkpoint_restarts_under_the_default(spark, tmp_path):
+    """A checkpoint begun on 8 state partitions keeps them when the
+    stream restarts on the default (4-partition) session: the count in
+    the offset log wins, no batch replays, and the upserted table equals
+    one availableNow run."""
+    import os
+    import time
+
+    from kafka_streams_homework_spark.queries import _stream_session
+
+    path = _write_events(spark, tmp_path, _THREE_BATCHES)
+    ckpt = str(tmp_path / "ckpt")
+    table: dict[tuple, float] = {}
+    batch_ids: list[int] = []
+
+    def alerts(qs):
+        dim = qs.createDataFrame([(1, "u1"), (2, "u2")], DIM_SCHEMA)
+        return price_alerts_stream(_stream(qs, path), dim, mode="update", threshold=0.0)
+
+    def upsert(batch_df, batch_id):
+        batch_ids.append(batch_id)
+        for r in batch_df.collect():
+            table[(r.alert_key, r.window_start)] = r.total_sum_per_minute
+
+    def start(qs, **trigger):
+        return (
+            alerts(qs)
+            .writeStream.foreachBatch(upsert)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(**trigger)
+            .start()
+        )
+
+    # run 1 on 8 partitions: batch 0 runs at start, the next trigger is
+    # an hour away
+    q = start(_stream_session(spark, 8), processingTime="1 hour")
+    deadline = time.monotonic() + 120
+    while q.lastProgress is None:
+        if not q.isActive:
+            q.awaitTermination()  # raises the query's error
+        assert time.monotonic() < deadline, "first micro-batch never committed"
+        time.sleep(0.1)
+    q.stop()
+    assert batch_ids == [0]
+    # run 2 resumes on the default session
+    default = _stream_session(spark)
+    assert default.conf.get("spark.sql.shuffle.partitions") == "4"
+    assert start(default, availableNow=True).awaitTermination(300), "restart never ended"
+    assert batch_ids == [0, 1, 2]
+
+    once = run_upsert(
+        spark, alerts(_stream_session(spark)), ["alert_key", "window_start"]
+    ).collect()
+    assert table == {(r.alert_key, r.window_start): r.total_sum_per_minute for r in once}
+    assert table == _THREE_BATCH_SUMS
+    # one directory per state partition, beside the operator's _metadata,
+    # and each of the 8 committed every batch, the restarted ones included
+    state = os.path.join(ckpt, "state", "0")
+    parts = [n for n in os.listdir(state) if n.isdigit()]
+    assert sorted(parts, key=int) == [str(i) for i in range(8)]
+    for part in parts:
+        names = set(os.listdir(os.path.join(state, part)))
+        assert {"1.delta", "2.delta", "3.delta"} <= names, (part, sorted(names))

@@ -8,12 +8,19 @@ query, for the plans/rNN before/after evidence.
 Usage:
   python tools/qtime.py [--runs N] [--explain-dir DIR] [--tag TAG] \
       [sf_dir] query [query ...]
+  python tools/qtime.py [--runs N] [sf_dir] --stateful-streams
+
+``--stateful-streams`` times every registry query that builds its
+stream on ``queries._stream_session`` (the stateful streams), so a
+state-layout change gets a one-command A/B: run it in both checkouts
+and compare the sum of mins it prints last.
 
 Prints one line per query: name, legs (sorted), median, min.
 """
 
 from __future__ import annotations
 
+import inspect
 import os
 import sys
 import time
@@ -30,6 +37,7 @@ def main() -> int:
     runs = 3
     explain_dir = None
     tag = ""
+    stateful = False
     positional: list[str] = []
     i = 0
     while i < len(argv):
@@ -43,6 +51,9 @@ def main() -> int:
         elif a == "--tag":
             tag = argv[i + 1]
             i += 2
+        elif a == "--stateful-streams":
+            stateful = True
+            i += 1
         elif a.startswith("--"):
             raise SystemExit(f"unknown flag {a}")
         else:
@@ -54,12 +65,16 @@ def main() -> int:
     else:
         sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
         names = positional
+    registry = Q.queries()
+    if stateful:
+        names += [
+            n for n, fn in registry.items() if "_stream_session(" in inspect.getsource(fn)
+        ]
     if not names:
         raise SystemExit("no queries given")
 
     spark = get_spark("qtime")
     spark.sparkContext.setLogLevel("ERROR")
-    registry = Q.queries()
     unknown = [n for n in names if n not in registry]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
@@ -67,6 +82,7 @@ def main() -> int:
     # warmup: JVM + parquet footers
     registry["source_scan"](spark, sf_dir).count()
 
+    mins = []
     for name in names:
         if explain_dir:
             os.makedirs(explain_dir, exist_ok=True)
@@ -93,11 +109,14 @@ def main() -> int:
             print(f"{name}: plan captured (no timing legs)", flush=True)
             continue
         med = legs[len(legs) // 2]
+        mins.append(legs[0])
         print(
             f"{name}: legs={[round(x, 3) for x in legs]} "
             f"median={med:.3f} min={legs[0]:.3f}",
             flush=True,
         )
+    if len(mins) > 1:
+        print(f"{len(mins)} queries: sum of mins={sum(mins):.3f}", flush=True)
     return 0
 
 
