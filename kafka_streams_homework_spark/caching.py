@@ -33,12 +33,6 @@ def tracked_persist(df: DataFrame, level: StorageLevel | None = None) -> DataFra
     return df
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an already-persisted DataFrame for later release."""
-    _TRACKED.append(df)
-    return df
-
-
 def tracked_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     """``df.localCheckpoint`` whose blocks ``release_caches`` frees.
 

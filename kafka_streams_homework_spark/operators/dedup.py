@@ -42,6 +42,7 @@ from kafka_streams_homework_spark.caching import (
     tracked_persist,
 )
 from kafka_streams_homework_spark.functions import shingle_hashes, shingles, tokens
+from kafka_streams_homework_spark.session import bounded_loop
 from kafka_streams_homework_spark.sources.batch import spread
 
 # ---------------------------------------------------------------------------
@@ -393,10 +394,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     # run over bounded edge/label tables through pre-partitioned
     # checkpoints — AQE only decomposes each convergence count into
     # sequential stage-jobs with ~0.1 s driver gaps each.
-    spark = pairs.sparkSession
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with bounded_loop(pairs.sparkSession):
         while iters_done < max_iters:
             stepped = labels
             for _ in range(min(check_every, max_iters - iters_done)):
@@ -419,8 +417,6 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
             labels = new_labels
             if changed == 0:
                 break
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
     release_checkpoint(edges)
     if changed > 0:
         # a component's diameter exceeded max_iters: labels are NOT a

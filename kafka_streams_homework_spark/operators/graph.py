@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kafka_streams_homework_spark.caching import tracked_persist
+from kafka_streams_homework_spark.session import bounded_loop
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -212,13 +213,8 @@ def bfs_hops(
     # AQE off for the hop loop (r12, bpe_train/kcore finding): every
     # hop's joins are broadcasts over node-bounded frames — AQE only
     # adds per-action stage-job decomposition and driver gaps.
-    spark = edges.sparkSession
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with bounded_loop(edges.sparkSession):
         return _bfs_loop(_ckpt, edges, seed, max_hops, release_checkpoint)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
 
 def _bfs_loop(_ckpt, edges: DataFrame, seed: DataFrame, max_hops: int, release_checkpoint):

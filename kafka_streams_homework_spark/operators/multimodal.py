@@ -12,8 +12,8 @@ metadata alongside. The Spark-side contract is real and tested:
   (float DCT, Annex-K tables, canonical Huffman), video = MJPEG in a
   spec-conformant RIFF/AVI container demuxed chunk-by-chunk.
   `decode_stub` remains as the cheap deterministic stand-in for
-  plumbing-only queries; `decode_real` documents the one remaining
-  codec-library boundary (inter-frame codecs like H.264).
+  plumbing-only queries. Inter-frame video codecs (H.264/VP9: motion
+  compensation + CABAC need a codec library) are out of scope.
 
 Scale design: binary payloads dominate the bytes — the pipeline keeps
 them in place (no shuffle touches `payload`; metadata extraction is a
@@ -272,55 +272,10 @@ def audio_chunks(media: DataFrame) -> DataFrame:
     )
 
 
-def decode_real(media: DataFrame) -> DataFrame:  # pragma: no cover
-    """Real decoder — requires PIL/soundfile, absent in this container.
-
-    Intended implementation: identical mapInPandas shape to
-    decode_stub, with the body calling PIL.Image.open /
-    soundfile.read on io.BytesIO(payload) and emitting true
-    width/height/duration; frame sampling for video via
-    cv2.VideoCapture on a temp file, one row per sampled frame.
-
-    Env probe (round 5, VERDICT r4 task 7): ``import PIL`` →
-    ModuleNotFoundError; ``cv2``, ``soundfile``, ``librosa``, ``av``
-    likewise absent. No importable codec exists in this container, so
-    the gate stands; the closest real-bytes operation that IS
-    implementable — fixed-size payload segmentation — ships as
-    ``audio_chunks`` (oracle-checked end-to-end).
-
-    Round-5 addendum: the probe missed that Python's STDLIB ``wave``
-    module is itself a real RIFF/PCM codec — the audio/wav leg now
-    decodes for real via ``synth_wav`` / ``wav_decode`` below
-    (queries.wav_pipeline, oracle-hash-checked). Likewise the image
-    leg: PNG's compression layer is stdlib ``zlib``, so
-    ``encode_png_gray8`` / ``decode_png_gray8`` below implement a
-    genuine spec-conformant grayscale-8 PNG codec (CRC32 chunk walk,
-    inflate, all five scanline filters; queries.png_pipeline,
-    oracle-hash-checked).
-
-    Round-6 addendum: baseline JPEG needs no codec library either —
-    ``encode_jpeg_gray_baseline`` / ``decode_jpeg_gray_baseline``
-    below are a general ITU T.81 baseline pair (float DCT, Annex-K
-    tables, canonical Huffman, byte stuffing; queries.jpeg_pipeline,
-    oracle-hash-checked) — and with a real JPEG decoder, VIDEO closes
-    too: ``encode_mjpeg_avi`` / ``decode_mjpeg_avi`` mux/demux
-    Motion-JPEG in a spec-conformant RIFF/AVI container
-    (queries.video_pipeline, oracle-hash-checked). The only remaining
-    boundary is INTER-FRAME video codecs (H.264/VP9: motion
-    compensation + CABAC genuinely need cv2/av/PyAV) — that is a
-    documented scope line, not a missing feature of the modeled
-    media classes.
-    """
-    raise NotImplementedError(
-        "media codecs are not installed in this environment; "
-        "use decode_stub (same Spark plumbing, deterministic fake codec)"
-    )
-
-
 # ---------------------------------------------------------------------------
-# Real WAV codec path (round 5): the env probe above found no
-# third-party codec, but Python's STDLIB `wave` module is a real
-# RIFF/PCM codec — so the "media decode" gap closes for audio/wav
+# Real WAV codec path (round 5): the engine takes no third-party codec
+# library (PIL, cv2, soundfile, av), but Python's STDLIB `wave` module
+# is a real RIFF/PCM codec — so the "media decode" gap closes for audio/wav
 # with genuine bytes and a genuine parser, no fake codec involved.
 # ---------------------------------------------------------------------------
 
@@ -529,8 +484,8 @@ def wav_frame_energy(media: DataFrame) -> DataFrame:
 # Real PNG codec path (round 5): zlib — the actual compression layer
 # of PNG — is stdlib too, and the PNG container (chunks + CRC32 +
 # scanline filters) is pure struct arithmetic. A minimal but genuine
-# grayscale-8 PNG encoder/decoder closes the IMAGE leg of the
-# decode_real gate the same way `wave` closed the audio leg: real
+# grayscale-8 PNG encoder/decoder closes the IMAGE leg of real media
+# decoding the same way `wave` closed the audio leg: real
 # bytes, real inflate, real unfiltering, real CRC integrity checks.
 # ---------------------------------------------------------------------------
 
@@ -799,8 +754,8 @@ def png_ahash(media: DataFrame) -> DataFrame:
 # Annex-K luminance quantization + Huffman tables written to and
 # parsed back from the bitstream (DQT/DHT/SOF0/SOS marker walk, byte
 # un-stuffing, DC prediction, run-length AC, ZRL/EOB) — not a
-# shortcut tuned to the fixture. After this, decode_real gates VIDEO
-# only. Reference analogue: none (north-star multimodal extension).
+# shortcut tuned to the fixture. After this, only VIDEO lacks a real
+# decoder. Reference analogue: none (north-star multimodal extension).
 # ---------------------------------------------------------------------------
 
 JPEG_QTABLE = [  # ITU T.81 Annex K.1 luminance, natural (row-major) order
@@ -1206,11 +1161,10 @@ def jpeg_decode(media: DataFrame) -> DataFrame:
 # baseline JPEG; AVI per the Microsoft RIFF/AVI spec: hdrl with
 # avih/strh/strf headers, movi LIST of 00dc chunks, idx1 index).
 # Muxer and demuxer below are stdlib struct only; frame decode is the
-# general T.81 decoder above. After this, decode_real's
-# NotImplementedError is retired: every media class the engine models
-# (audio/WAV, image/PNG+JPEG, video/MJPEG-AVI) has a real byte-level
-# codec. Inter-frame codecs (H.264 etc.) remain out of scope — that is
-# a codec-library boundary, stated in the docstring, not a stub.
+# general T.81 decoder above. After this, every media class the
+# engine models (audio/WAV, image/PNG+JPEG, video/MJPEG-AVI) has a
+# real byte-level codec. Inter-frame codecs (H.264 etc.) remain out of
+# scope — a codec-library boundary, stated in the module docstring.
 # ---------------------------------------------------------------------------
 
 AVI_FPS = 10

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_homework_spark.functions import cosine_similarity
+from kafka_streams_homework_spark.session import bounded_loop
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
@@ -140,8 +141,9 @@ tens of thousands of training points regardless of corpus size, so at
 (~32k × dim floats, a few MB) plus vectorized Lloyd on the driver —
 while everything corpus-sized (assignment, encode, probe, re-rank)
 stays a distributed scan. The distributed-Lloyd twins
-(kmeans_cells_distributed / pq_fit_distributed) remain for corpora
-where even sampling must stay cluster-side."""
+(kmeans_cells_distributed / pq_fit_distributed) are kept as the
+reference fit that test_sample_fit_matches_distributed_fit checks the
+sampled fits against."""
 
 
 def _sample_vectors(embeddings: DataFrame, n: int):
@@ -165,24 +167,17 @@ def kmeans_cells(
     embeddings: DataFrame,
     ncells: int = 8,
     iters: int = 4,
-    fit_sample: int | None = FIT_SAMPLE_DEFAULT,
 ) -> DataFrame:
     """Spherical k-means coarse quantizer.
 
-    Default path: train on a bounded deterministic sample (see
-    FIT_SAMPLE_DEFAULT — one collect job + vectorized numpy Lloyd,
-    O(sample) driver work independent of corpus size). Semantics match
-    the distributed twin: cosine assignment with lowest-cell
-    tie-break, raw-mean update, empty cells keep their centroid,
-    init = the ncells vectors with smallest xxhash64(vec_id).
-
-    fit_sample=None delegates to kmeans_cells_distributed (Lloyd as
-    DataFrame jobs — for when the training set itself must stay
-    cluster-side).
+    Trains on a bounded deterministic sample (see FIT_SAMPLE_DEFAULT —
+    one collect job + vectorized numpy Lloyd, O(sample) driver work
+    independent of corpus size). Semantics match the distributed twin:
+    cosine assignment with lowest-cell tie-break, raw-mean update,
+    empty cells keep their centroid, init = the ncells vectors with
+    smallest xxhash64(vec_id).
     """
-    if fit_sample is None:
-        return kmeans_cells_distributed(embeddings, ncells, iters)
-    _, X = _sample_vectors(embeddings, fit_sample)
+    _, X = _sample_vectors(embeddings, FIT_SAMPLE_DEFAULT)
     cents = _kmeans_np(X, ncells, iters)
     spark = embeddings.sparkSession
     return spark.createDataFrame(
@@ -233,7 +228,9 @@ def kmeans_cells_distributed(
     This is the training-set-stays-cluster-side twin of kmeans_cells;
     assignment of the full corpus happens once, in knn_ivf_kmeans, and
     would be persisted as bucketed-by-cell parquet so probes are
-    partition-pruned scans.
+    partition-pruned scans. No query calls it: it is kept as the
+    reference test_sample_fit_matches_distributed_fit checks
+    kmeans_cells against.
     """
     corpus = embeddings.select("vec_id", "embedding")
     init = (
@@ -1006,12 +1003,11 @@ def pq_fit(
     m: int = 16,
     ksub: int = 32,
     iters: int = 4,
-    fit_sample: int | None = FIT_SAMPLE_DEFAULT,
 ) -> DataFrame:
     """Fit PQ codebooks: per-subspace k-means on L2-normalized
     subvectors.
 
-    Default path: bounded deterministic sample + vectorized numpy Lloyd
+    Bounded deterministic sample + vectorized numpy Lloyd
     (see FIT_SAMPLE_DEFAULT) — all m subspaces trained at once on a
     (n, m, dsub) reshape; fit cost is constant in corpus size. Matches
     the distributed twin's semantics: L2 assignment with lowest-code
@@ -1021,13 +1017,10 @@ def pq_fit(
 
     Returns (sub, code, centroid: array<double>). Driver state is the
     codebook only — m × ksub × dsub doubles (e.g. 16×32×4 = 2k for
-    64-dim), independent of corpus size. fit_sample=None delegates to
-    pq_fit_distributed.
+    64-dim), independent of corpus size.
     """
-    if fit_sample is None:
-        return pq_fit_distributed(embeddings, m, ksub, iters)
     spark = embeddings.sparkSession
-    _, X = _sample_vectors(embeddings, fit_sample)
+    _, X = _sample_vectors(embeddings, FIT_SAMPLE_DEFAULT)
     nested = _pq_np(X, m, ksub, iters)
     return spark.createDataFrame(
         [
@@ -1081,7 +1074,9 @@ def pq_fit_distributed(
 
     Returns (sub, code, centroid: array<double>). Driver state is the
     codebook only — m × ksub × dsub doubles (e.g. 16×32×4 = 2k for
-    64-dim), independent of corpus size.
+    64-dim), independent of corpus size. No query calls it: it is kept
+    as the reference test_sample_fit_matches_distributed_fit checks
+    pq_fit against.
     """
     from kafka_streams_homework_spark.caching import tracked_persist
 
@@ -1711,19 +1706,8 @@ def mmr_rerank(
     # and bounded-table shuffle partitions; the data-sized candidate
     # scan is unaffected (its exchanges happen under psim's explicit
     # repartition / the broadcast scan).
-    spark_ = embeddings.sparkSession
-    aqe_before = spark_.conf.get("spark.sql.adaptive.enabled", "true")
-    sp_before = spark_.conf.get("spark.sql.shuffle.partitions")
-    spark_.conf.set("spark.sql.adaptive.enabled", "false")
-    spark_.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(max(8, spark_.sparkContext.defaultParallelism // 4)),
-    )
-    try:
+    with bounded_loop(embeddings.sparkSession, small_shuffles=True):
         return _mmr_greedy(cand, psim, w1, k, lam)
-    finally:
-        spark_.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark_.conf.set("spark.sql.shuffle.partitions", sp_before)
 
 
 def _mmr_greedy(cand, psim, w1, k: int, lam: float):

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_homework_spark.caching import release_checkpoint, tracked_persist
 from kafka_streams_homework_spark.functions import count_in_set, tokens
+from kafka_streams_homework_spark.session import bounded_loop
 
 # Stopword list for the heuristic language scorer. Tiny on purpose: the
 # corpus is synthetic; the operator demonstrates the shape (per-doc
@@ -795,21 +796,11 @@ def bpe_train_merges(
     # The loop's shuffles move only the vocabulary-sized segmentation
     # (|vocab| x avg word length rows — a few MB here, a few GB at web
     # scale): size their partition count to that table, not to the
-    # session default meant for data-sized shuffles. defaultParallelism/4
-    # keeps it proportional to the cluster (local[32] -> 8, measured
-    # equal-or-better than 32 with far fewer tasks to schedule per step).
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    sp_before = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(8, spark.sparkContext.defaultParallelism // 4)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    # session default meant for data-sized shuffles.
+    with bounded_loop(spark, small_shuffles=True):
         return _bpe_train_merges_loop(
             spark, words, n_merges, return_segmentation
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", sp_before)
 
 
 def _bpe_train_merges_loop(

@@ -38,7 +38,7 @@ from kafka_streams_homework_spark.caching import (
     tracked_checkpoint,
     tracked_persist,
 )
-from kafka_streams_homework_spark.session import apply_runtime_confs
+from kafka_streams_homework_spark.session import apply_runtime_confs, bounded_loop
 from kafka_streams_homework_spark.sources.batch import load_table, parquet_schema, spread
 from kafka_streams_homework_spark.sources.sink import (
     write_and_read_back,

@@ -392,14 +392,10 @@ def _kcore_peel(cur: DataFrame, k: int, cap: int):
     # (bpe_train finding, ~0.1 s of driver gap per job).
     spark = cur.sparkSession
     dp = spark.sparkContext.defaultParallelism
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     cur = cur.repartition(dp, "src").localCheckpoint(eager=False)
     n_cur = cur.count()
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with bounded_loop(spark):
         return _kcore_rounds(spark, cur, n_cur, k, cap)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
 
 def _kcore_rounds(spark, cur: DataFrame, n_cur: int, k: int, cap: int):

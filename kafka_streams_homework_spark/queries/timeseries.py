@@ -1461,18 +1461,8 @@ def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bpe_train/kcore finding): the cell table is |types| x |dows| (~35
     # rows) — the data-sized events aggregate above already
     # materialized under the full session confs via the collect.
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    sp_before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(max(8, spark.sparkContext.defaultParallelism // 4)),
-    )
-    try:
+    with bounded_loop(spark, small_shuffles=True):
         cells = _ipf_loop(cells, total, ni, nj)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", sp_before)
     wd = F.col("w").cast("double")
     return cells.select(
         F.col("i").alias("event_type"),

@@ -7,7 +7,9 @@ operator: per-record state mutation (running sum per (window, key),
 threshold (:56-84) and state GC (:85-89).
 
 Spark twin: ``applyInPandasWithState`` — grouped state + timeouts.
-Two variants:
+(``transformWithState`` maps the Processor API — MapState plus timers —
+one to one, but is not used: it needs protobuf in the Python workers
+and the RocksDB state store.) Two variants:
 
 - ``windowed_sum_stateful`` — *event-time* (deterministic,
   watermark-driven; the semantics the engine documents as primary).

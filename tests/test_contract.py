@@ -8,7 +8,9 @@ the real views — no execution) and pin the flagship schema.
 
 from __future__ import annotations
 
+import re
 import uuid
+from pathlib import Path
 
 import duckdb
 import pyarrow as pa
@@ -18,6 +20,8 @@ from pyspark.sql.types import BinaryType, StringType
 
 import __spark_entry__ as E
 from kafka_streams_homework_spark import caching
+from kafka_streams_homework_spark.operators.graph import bfs_hops
+from kafka_streams_homework_spark.session import bounded_loop
 from kafka_streams_homework_spark.sources.batch import TABLES, load_table
 from kafka_streams_homework_spark.sources.sink import write_and_read_back, write_parquet
 
@@ -234,3 +238,62 @@ def test_release_caches_warns_on_a_failing_callback_and_continues(monkeypatch):
     with pytest.warns(RuntimeWarning, match="_broken_memo_clear.*boom"):
         caching.release_caches()
     assert ran == [1]
+
+
+_LOOP_CONFS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+
+def _loop_confs(spark):
+    return {k: spark.conf.get(k, None) for k in _LOOP_CONFS}
+
+
+def test_bounded_loop_sets_its_confs_and_restores_them_after_an_error(spark):
+    aqe, parts = _LOOP_CONFS
+    before = _loop_confs(spark)
+    dp = spark.sparkContext.defaultParallelism
+    with bounded_loop(spark):
+        assert spark.conf.get(aqe) == "false"
+        assert spark.conf.get(parts) == before[parts]
+    assert _loop_confs(spark) == before
+    with pytest.raises(ValueError, match="inside the loop"):
+        with bounded_loop(spark, small_shuffles=True):
+            assert spark.conf.get(aqe) == "false"
+            assert spark.conf.get(parts) == str(max(8, dp // 4))
+            raise ValueError("inside the loop")
+    assert _loop_confs(spark) == before
+
+
+def test_bounded_loop_unsets_a_conf_that_was_unset(spark):
+    qs = spark.newSession()
+    for k in _LOOP_CONFS:
+        qs.conf.unset(k)
+    assert _loop_confs(qs) == {k: None for k in _LOOP_CONFS}
+    with bounded_loop(qs, small_shuffles=True):
+        assert qs.conf.get(_LOOP_CONFS[0]) == "false"
+    assert _loop_confs(qs) == {k: None for k in _LOOP_CONFS}
+
+
+def test_a_real_loop_leaves_the_session_confs_as_it_found_them(spark):
+    before = _loop_confs(spark)
+    edges = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
+    seed = spark.createDataFrame([(0,)], "node long")
+    out = bfs_hops(edges, seed, max_hops=5)
+    assert _loop_confs(spark) == before
+    assert {r.node: r.hops for r in out.collect()} == {0: 0, 1: 1, 2: 2}
+
+
+def test_only_session_modules_change_spark_confs():
+    """Configuration is decided in session.py (and the stream-session
+    clone in queries/_shared.py); an operator that needs other confs for
+    a driver loop uses session.bounded_loop."""
+    pkg = Path(__file__).resolve().parents[1] / "kafka_streams_homework_spark"
+    allowed = {"session.py", "queries/_shared.py"}
+    call = re.compile(r"\.conf\.(set|unset)\(")
+    offenders = sorted(
+        f"{path.relative_to(pkg).as_posix()}:{n}"
+        for path in pkg.rglob("*.py")
+        if path.relative_to(pkg).as_posix() not in allowed
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if call.search(line)
+    )
+    assert offenders == []

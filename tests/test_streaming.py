@@ -430,57 +430,6 @@ def test_session_append_holdback_resolves_across_restarts(spark, tmp_path):
     assert got == {(1, 0): 3.0}
 
 
-def test_stateful_v2_transform_with_state(spark, tmp_path):
-    """Spark-4 StatefulProcessor twin: MapState + event-time timers
-    reproduce the same emit-once semantics as the
-    applyInPandasWithState op."""
-    from kafka_streams_homework_spark.compat import ensure_protobuf
-
-    ensure_protobuf()  # vendored-protobuf discovery (compat.py)
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithStateInPandas needs protobuf in the Python "
-        "worker (none installed or vendored in this environment); "
-        "applyInPandasWithState is the CI-driven stateful path",
-    )
-    from kafka_streams_homework_spark.streaming.stateful_v2 import (
-        windowed_sum_stateful_v2,
-    )
-
-    path = _write_events(
-        spark,
-        tmp_path,
-        [
-            [(1, ts(5, 10), 100.0), (1, ts(5, 20), 60.0), (1, ts(6, 10), 10.0)],
-            [(1, ts(20, 0), 1.0)],  # watermark → closes [5,6) and [6,7)
-        ],
-    )
-    alerts = windowed_sum_stateful_v2(
-        _stream(spark, path), threshold=150.0, watermark_delay="2 minutes"
-    )
-    # transformWithState keeps each state variable in its own column
-    # family — only the RocksDB provider supports that
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_to_memory(
-            spark, alerts, f"st2_{uuid.uuid4().hex[:8]}", mode="append"
-        ).collect()
-    finally:
-        if prev is not None:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
-    assert len(out) == 1
-    assert out[0].alert_key == "1"
-    assert out[0].window_start_ms == int(ts(5).timestamp() * 1000)
-    assert out[0].total_sum_per_minute == 160.0
-
-
 def test_stateful_windowed_sum_emits_closed_windows_once(spark, tmp_path):
     """U4 twin: applyInPandasWithState accumulates per-window sums,
     emits each window once when the watermark closes it, deletes state

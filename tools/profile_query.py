@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import shlex
 import sys
 import time
 
@@ -32,27 +33,20 @@ def main() -> int:
     shutil.rmtree(LOGDIR, ignore_errors=True)
     os.makedirs(LOGDIR, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    # Event logging is a static conf: pass it at launch, so the session
+    # comes from the engine's own factory.
+    confs = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": LOGDIR,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+    args = " ".join(f"--conf {shlex.quote(f'{k}={v}')}" for k, v in confs.items())
+    os.environ["PYSPARK_SUBMIT_ARGS"] = f"{args} pyspark-shell"
 
-    from kafka_streams_homework_spark import session as S
+    from kafka_streams_homework_spark.session import get_spark
 
-    # mirror get_spark but with event logging on (static conf)
-    cpus = S.default_parallelism()
-    builder = (
-        SparkSession.builder.appName("profile")
-        .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", LOGDIR)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-    )
-    for k, v in {**S.STATIC_CONFS, **S.RUNTIME_CONFS}.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
 
     from kafka_streams_homework_spark import queries as Q
