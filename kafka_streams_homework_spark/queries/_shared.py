@@ -39,13 +39,20 @@ from kafka_streams_homework_spark.caching import (
     tracked_persist,
 )
 from kafka_streams_homework_spark.session import apply_runtime_confs, bounded_loop
-from kafka_streams_homework_spark.sources.batch import load_table, parquet_schema, spread
+from kafka_streams_homework_spark.sources.batch import (
+    load_table,
+    parquet_schema,
+    spread,
+    ts_as_timestamp,
+)
 from kafka_streams_homework_spark.sources.sink import (
     write_and_read_back,
     write_parquet,
 )
 from kafka_streams_homework_spark.streaming.price_alerts import (
     price_alerts_stream,
+    run_append,
+    run_replace,
     run_upsert,
 )
 
@@ -137,63 +144,41 @@ def _stream_session(spark: SparkSession, partitions: int = 4) -> SparkSession:
     ``spark.newSession()`` scoping (ADVICE r9): the clone shares the
     SparkContext but owns its SQLConf, so a concurrent query on the
     caller's session can never inherit the reduced parallelism. Build
-    the STREAM plan on the returned session; hand the collected result
-    back on the caller's session (run_append/run_upsert/run_replace
-    already do).
+    the STREAM plan on the returned session; a stream reaches the driver
+    only through the three collectors (``run_append``, ``run_upsert``,
+    ``run_replace``), which take the caller's session and hand the
+    collected result back on it.
     """
     qs = apply_runtime_confs(spark.newSession())
     qs.conf.set("spark.sql.shuffle.partitions", str(partitions))
     return qs
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as a streaming source, layout-agnostic.
+def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``{name}.parquet`` as a streaming source, layout-agnostic.
 
-    The driver fixtures store events.parquet as a single FILE inside
-    sf_dir (the file-source needs a directory, so we stream sf_dir with
-    a leaf-file glob); replicated/partitioned layouts (scale_probe,
-    real deployments) store it as a DIRECTORY of part files, which
-    streams directly. The glob path would silently match zero files on
-    a directory layout — that is why this helper exists.
+    The driver fixtures store each table as a single FILE inside sf_dir
+    (the file source needs a directory, so we stream sf_dir with a
+    leaf-file glob); replicated/partitioned layouts (scale_probe, real
+    deployments) store it as a DIRECTORY of part files, which streams
+    directly. The glob path would silently match zero files on a
+    directory layout — that is why this helper exists. Columns are
+    typed as ``load_table`` types them (``sources.batch.ts_as_timestamp``).
     """
-    path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = parquet_schema(spark, path)
-    reader = spark.readStream.schema(raw_schema)
+    file = f"{name}.parquet"
+    path = os.path.join(sf_dir, file)
+    reader = spark.readStream.schema(parquet_schema(spark, path))
     if os.path.isdir(path):
         stream = reader.parquet(path)
     else:
-        stream = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return stream
+        stream = reader.option("pathGlobFilter", file).parquet(sf_dir)
+    return ts_as_timestamp(stream, name)
 
 
-def _emb_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings.parquet as a streaming source — the ingest-side view
-    of the vector corpus for streaming ANN maintenance (new vectors
-    are cell-assigned AT INGEST; a batch re-index is the slow path).
-    Same layout-agnostic file/directory handling as
-    ``_events_stream``."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    raw_schema = parquet_schema(spark, path)
-    reader = spark.readStream.schema(raw_schema)
-    if os.path.isdir(path):
-        return reader.parquet(path)
-    return reader.option("pathGlobFilter", "embeddings.parquet").parquet(sf_dir)
-
-
-def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.parquet as a streaming source — the ingest-side view
-    of the corpus for streaming twins of the LLM-pipeline text ops
-    (tokenize/quality-score stages run AT INGEST in production
-    pipelines, not as batch afterthoughts). Same layout-agnostic
-    file/directory handling as ``_events_stream``."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    raw_schema = parquet_schema(spark, path)
-    reader = spark.readStream.schema(raw_schema)
-    if os.path.isdir(path):
-        return reader.parquet(path)
-    return reader.option("pathGlobFilter", "documents.parquet").parquet(sf_dir)
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events.parquet as a streaming source (timed by name in traced
+    benchmark runs, so it stays its own function)."""
+    return _table_stream(spark, sf_dir, "events")
 
 
 # --- shared SQL fragments promoted from family modules (used across families) ---

@@ -24,7 +24,7 @@ from kafka_streams_homework_spark.queries._shared import *  # noqa
         FROM events e ASOF LEFT JOIN r
           ON e.user_id = r.o_custkey AND e.ts >= r.o_orderdate
     """,
-    description="Streaming twin of asof_join via run_batch_transform: "
+    description="Streaming twin of asof_join via run_append(transform=...): "
     "Spark's stream-static join is equi-key only, so the point-in-time "
     "lookup runs the BATCH asof operator inside foreachBatch against "
     "the static order table — the documented production pattern for "
@@ -34,10 +34,6 @@ from kafka_streams_homework_spark.queries._shared import *  # noqa
     "as the batch twin (streaming/batch parity)",
 )
 def q_streaming_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import (
-        run_batch_transform,
-    )
-
     apply_runtime_confs(spark)
     stream = _events_stream(spark, sf_dir).select("event_id", "user_id", "ts")
     orders = _t(spark, sf_dir, "orders")
@@ -58,7 +54,7 @@ def q_streaming_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["last_order_key", "last_order_date"],
         ).select("event_id", "user_id", "ts", "last_order_key", "last_order_date")
 
-    return run_batch_transform(spark, stream, lookup)
+    return run_append(spark, stream, transform=lookup)
 
 
 @register(
@@ -89,7 +85,7 @@ def q_streaming_price_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # foreachBatch upsert keyed by (alert_key, window_start): keeps the
     # latest emission per window, so the result is identical whether
     # the source processes as one micro-batch or many
-    return run_upsert(spark, alerts, ["alert_key", "window_start"], mode="update")
+    return run_upsert(spark, alerts, ["alert_key", "window_start"])
 
 
 @register(
@@ -126,7 +122,7 @@ def q_streaming_latest_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b.event_type").alias("last_event_type"),
         F.col("b.value").alias("last_value"),
     )
-    return run_upsert(spark, out, ["user_id"], mode="update")
+    return run_upsert(spark, out, ["user_id"])
 
 
 @register(
@@ -141,7 +137,7 @@ def q_streaming_latest_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     "family)",
 )
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming import dedup_stream, run_append
+    from kafka_streams_homework_spark.streaming import dedup_stream
 
     apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: dedup state = distinct key pairs
@@ -224,10 +220,7 @@ def q_streaming_stateful_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "co-partitioned windowed join",
 )
 def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming import (
-        interval_join_streams,
-        run_append,
-    )
+    from kafka_streams_homework_spark.streaming import interval_join_streams
 
     apply_runtime_confs(spark)
     # _stream_session (r12): stream-stream join buffers both sides in
@@ -303,10 +296,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "applies the identical cut in plain SQL",
 )
 def q_streaming_interval_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming import (
-        interval_join_streams,
-        run_append,
-    )
+    from kafka_streams_homework_spark.streaming import interval_join_streams
 
     apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: join state, see _shared.py
@@ -365,7 +355,7 @@ def q_streaming_windowed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
     qs = _stream_session(spark)  # r12: id-set state per (type, window)
     stream = _events_stream(qs, sf_dir)
     out = windowed_distinct_stream(stream)
-    return run_upsert(spark, out, ["event_type", "window_start"], mode="update")
+    return run_upsert(spark, out, ["event_type", "window_start"])
 
 
 @register(
@@ -397,8 +387,6 @@ def q_streaming_windowed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
     "oracle as the batch twin (streaming/batch parity)",
 )
 def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_replace
-
     apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: ~1e5 session-window state rows
     stream = _events_stream(qs, sf_dir)
@@ -417,7 +405,7 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "total_value",
     )
-    return run_replace(spark, sess, mode="complete")
+    return run_replace(spark, sess)
 
 
 SENTINEL_USER = -1
@@ -461,8 +449,6 @@ def q_streaming_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame
     import datetime as dt
     import shutil
     import tempfile
-
-    from kafka_streams_homework_spark.streaming.price_alerts import run_append
 
     import os as _os
 
@@ -590,7 +576,7 @@ def q_streaming_windowed_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_distinct_approx",
         )
     )
-    return run_upsert(spark, out, ["event_type", "window_start"], mode="update")
+    return run_upsert(spark, out, ["event_type", "window_start"])
 
 
 @register(
@@ -883,8 +869,6 @@ def q_avro_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "gaps-and-islands oracle as the batch twin",
 )
 def q_streaming_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_replace
-
     apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: per-user streak session state
     stream = _events_stream(qs, sf_dir)
@@ -941,8 +925,6 @@ TOPK_WINDOW_N = 3
     "same batch oracle shape as topk_per_group",
 )
 def q_streaming_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_replace
-
     apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: |types| x hours count state
     stream = _events_stream(qs, sf_dir)
@@ -957,7 +939,7 @@ def q_streaming_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    emitted = run_replace(spark, counts, mode="complete")
+    emitted = run_replace(spark, counts)
     w = Window.partitionBy("window_start").orderBy(
         F.col("n_events").desc(), "event_type"
     )
@@ -1017,8 +999,6 @@ DECAY_BASE_EPOCH = 1704067200  # 2024-01-01T00:00:00Z, before the corpus
 def q_streaming_decayed_leaderboard(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_replace
-
     apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: one state row per user
     stream = _events_stream(qs, sf_dir)
@@ -1034,7 +1014,7 @@ def q_streaming_decayed_leaderboard(
         ).alias("raw"),
         F.max(sec).alias("max_sec"),
     )
-    emitted = run_replace(spark, per_user, mode="complete")
+    emitted = run_replace(spark, per_user)
     b = emitted.agg(F.max("max_sec").alias("tmax"))
     scored = emitted.crossJoin(F.broadcast(b)).select(
         "user_id",
@@ -1096,8 +1076,6 @@ def q_streaming_decayed_leaderboard(
     "the cum window partitions by day over <=491 bucket rows",
 )
 def q_streaming_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_replace
-
     apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: (day, bucket) count state
     stream = _events_stream(qs, sf_dir)
@@ -1112,7 +1090,7 @@ def q_streaming_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("window_start"), "bucket", "c"
         )
     )
-    emitted = run_replace(spark, hist, mode="complete")
+    emitted = run_replace(spark, hist)
     wd = Window.partitionBy("window_start")
     cum = emitted.select(
         "window_start",
@@ -1217,7 +1195,7 @@ def q_streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: (series, hour) OHLC state
     agg = _ohlc_stream_agg(_events_stream(qs, sf_dir))
-    emitted = run_upsert(spark, agg, ["event_type", "bucket"], mode="update")
+    emitted = run_upsert(spark, agg, ["event_type", "bucket"])
     return emitted.select(
         "event_type",
         "bucket",
@@ -1266,10 +1244,8 @@ def q_streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a pure map stage: scales horizontally with zero shuffle",
 )
 def q_streaming_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_append
-
     apply_runtime_confs(spark)
-    stream = _docs_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "documents")
     return run_append(spark, T.quality_score(stream))
 
 
@@ -1309,7 +1285,6 @@ def q_streaming_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "state is k doubles x |groups| regardless of event volume",
 )
 def q_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_upsert
     from kafka_streams_homework_spark.streaming.stateful import (
         kmv_distinct_stateful,
     )
@@ -1318,7 +1293,7 @@ def q_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = _stream_session(spark)  # r12: one KMV sketch per event type
     stream = _events_stream(qs, sf_dir)
     sketch = kmv_distinct_stateful(stream, "event_type", "user_id", k=64)
-    emitted = run_upsert(spark, sketch, ["g"], mode="update")
+    emitted = run_upsert(spark, sketch, ["g"])
     return emitted.select(
         F.col("g").alias("event_type"),
         F.col("n_sketch").cast("bigint").alias("n_sketch"),
@@ -1386,8 +1361,6 @@ def q_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mode via run_replace",
 )
 def q_streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_replace
-
     apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: (type, day, bin) count state
     stream = _events_stream(qs, sf_dir)
@@ -1405,7 +1378,7 @@ def q_streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", F.col("win.start").alias("day"), "bin", "c"
         )
     )
-    emitted = run_replace(spark, hist, mode="complete")
+    emitted = run_replace(spark, hist)
     b0 = emitted.agg(F.min("day").alias("d0"))
     cut = emitted.crossJoin(F.broadcast(b0)).select(
         "event_type",
@@ -1478,8 +1451,6 @@ NB_TOP_V = 1 << 16  # vocabulary cap for the broadcast NB model (OOV bucket)
     "pipelines",
 )
 def q_streaming_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_append
-
     apply_runtime_confs(spark)
     # no _stream_session here (r12): the scored stream is STATELESS
     # (stream-static join + projection, append mode — no state stores),
@@ -1602,7 +1573,7 @@ def _nb_scored_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast), and the training plan behind it is multi-stage —
     # cache it so every evaluation after the first reads one row
     model = tracked_persist(_nb_model(spark, sf_dir))
-    stream = _docs_stream(spark, sf_dir).withColumn("one", F.lit(1))
+    stream = _table_stream(spark, sf_dir, "documents").withColumn("one", F.lit(1))
     joined = stream.join(F.broadcast(model), "one")
     tk = tokens("text")
 
@@ -1665,8 +1636,6 @@ def _nb_scored_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "At 100 TB/day: a zero-shuffle map stage with one broadcast",
 )
 def q_streaming_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_append
-
     apply_runtime_confs(spark)
     events = _t(spark, sf_dir, "events")
     stats = events.groupBy(F.col("event_type").alias("s_type")).agg(
@@ -1733,7 +1702,6 @@ def q_streaming_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     "O(|groups|) scalars",
 )
 def q_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_upsert
     from kafka_streams_homework_spark.streaming.stateful import (
         page_hinkley_stateful,
     )
@@ -1742,7 +1710,7 @@ def q_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = _stream_session(spark)  # r12: one PH state row per type
     stream = _events_stream(qs, sf_dir)
     ph = page_hinkley_stateful(stream, "event_type", "ts", "value")
-    emitted = run_upsert(spark, ph, ["g"], mode="update")
+    emitted = run_upsert(spark, ph, ["g"])
     return emitted.select(
         F.col("g").alias("event_type"),
         F.col("n").cast("bigint").alias("n"),
@@ -1801,7 +1769,6 @@ def q_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_streaming_oov_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_homework_spark.functions import tokens
-    from kafka_streams_homework_spark.streaming.price_alerts import run_append
 
     apply_runtime_confs(spark)
     docs = _t(spark, sf_dir, "documents")
@@ -1815,7 +1782,7 @@ def q_streaming_oov_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list("tok")).alias("vocab"))
         .withColumn("one", F.lit(1))
     )
-    stream = _docs_stream(spark, sf_dir).withColumn("one", F.lit(1))
+    stream = _table_stream(spark, sf_dir, "documents").withColumn("one", F.lit(1))
     tk = tokens("text")
     n_oov = F.size(
         F.filter(
@@ -1861,7 +1828,6 @@ def q_streaming_oov_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "registry (KMV sketch, Page-Hinkley, rate gate)",
 )
 def q_streaming_rate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_append
     from kafka_streams_homework_spark.streaming.stateful import (
         rate_gate_stateful,
     )
@@ -1893,7 +1859,6 @@ def q_streaming_rate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "readout maintained live instead of recomputed per batch",
 )
 def q_streaming_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_upsert
     from kafka_streams_homework_spark.streaming.stateful import (
         FN_STEPS,
         funnel_stateful,
@@ -1902,7 +1867,7 @@ def q_streaming_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: 3 scalars of state per user
     stream = _events_stream(qs, sf_dir)
-    pos = run_upsert(spark, funnel_stateful(stream), ["user_id"], mode="update")
+    pos = run_upsert(spark, funnel_stateful(stream), ["user_id"])
     counts = pos.agg(
         *[
             F.sum((F.col("reached") >= i).cast("long")).alias(f"n{i}")
@@ -1973,8 +1938,6 @@ ANN_INGEST_CELLS = 8
     "index (ivf_write_index layout); probes stay partition-pruned",
 )
 def q_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_append
-
     apply_runtime_confs(spark)
     emb = _t(spark, sf_dir, "embeddings")
     anchors = (
@@ -1997,7 +1960,7 @@ def q_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     out = (
-        _emb_stream(spark, sf_dir)
+        _table_stream(spark, sf_dir, "embeddings")
         .crossJoin(F.broadcast(cdf))
         .select(
             "vec_id",
@@ -2039,10 +2002,8 @@ def q_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "arithmetic, one Python crossing per micro-batch partition",
 )
 def q_streaming_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_append
-
     apply_runtime_confs(spark)
-    stream = _docs_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "documents")
     return run_append(spark, M.decode_and_resize(M.to_media(stream)))
 
 
@@ -2099,8 +2060,6 @@ SCMS_TOPK = 20
     "SQL, so the row is oracle-HASH like its batch twin",
 )
 def q_streaming_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_upsert
-
     apply_runtime_confs(spark)
     # _stream_session (r12): state here is the 2048-cell counter
     # matrix — a few state-store instances are ample; see _shared.py

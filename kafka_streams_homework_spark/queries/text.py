@@ -1834,8 +1834,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "composes this module's _bpe_encode_oracle chain",
 )
 def q_streaming_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_streams_homework_spark.streaming.price_alerts import run_upsert
-
     apply_runtime_confs(spark)
     seg = T.bpe_train_merges(
         _corpus_words(spark, sf_dir), N_BPE_MERGES, return_segmentation=True
@@ -1843,7 +1841,7 @@ def q_streaming_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     nsym = seg.groupBy("w").agg(
         F.count(F.lit(1)).cast("long").alias("n_sym")
     )
-    stream = _docs_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "documents")
     tok = stream.select(
         "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w")
     )
@@ -1855,7 +1853,7 @@ def q_streaming_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_sym").cast("long").alias("n_tokens_bpe"),
         )
     )
-    emitted = run_upsert(spark, agg, ["doc_id"], mode="update")
+    emitted = run_upsert(spark, agg, ["doc_id"])
     return emitted.select(
         "doc_id",
         "n_words",

@@ -121,24 +121,21 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     return copy.deepcopy(schema)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one table. Declarative — pushdown/pruning happen later.
-
-    events.ts is stored as parquet TIMESTAMP(NANOS), which Spark reads
-    only as long (spark.sql.legacy.parquet.nanosAsLong); convert to a
-    microsecond TimestampType here so downstream operators see a real
-    event-time column.
-    """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+def ts_as_timestamp(df: DataFrame, name: str) -> DataFrame:
+    """events.ts is stored as parquet TIMESTAMP(NANOS), which Spark reads
+    only as long (spark.sql.legacy.parquet.nanosAsLong); convert it to a
+    microsecond TimestampType so downstream operators see a real
+    event-time column. Batch scans and streams of a table both apply it."""
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # integer division — ns epochs exceed double's 53-bit mantissa
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one table. Declarative — pushdown/pruning happen later."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return ts_as_timestamp(spark.read.schema(parquet_schema(spark, path)).parquet(path), name)
 
 
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:

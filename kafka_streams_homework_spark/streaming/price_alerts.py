@@ -32,8 +32,14 @@ a larger count from its first start.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructType
 
 
 def price_alerts_stream(
@@ -111,143 +117,6 @@ def dedup_stream(
     )
 
 
-def run_to_memory(
-    spark: SparkSession,
-    alerts: DataFrame,
-    query_name: str,
-    mode: str = "update",
-) -> DataFrame:
-    """Run a streaming DataFrame to completion into a memory sink
-    (availableNow trigger — processes all available input as one or
-    more micro-batches, then stops) and return the sink contents."""
-    q = (
-        alerts.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
-def run_upsert(
-    spark: SparkSession,
-    alerts: DataFrame,
-    key_cols: list[str],
-    mode: str = "update",
-) -> DataFrame:
-    """Run an update-mode streaming DataFrame to completion, keeping the
-    LATEST emission per key — batch-count-independent, unlike a raw
-    memory sink.
-
-    An update-mode memory sink accumulates every per-batch emission, so
-    a source that happens to split into >1 micro-batch (multi-file
-    input, maxFilesPerTrigger) yields stale intermediate rows alongside
-    final ones. ``foreachBatch`` is the canonical upsert sink shape:
-    micro-batches arrive in order, so last-writer-wins per key is
-    exactly "current aggregate value". At scale the dict becomes a
-    keyed upsert to Kafka/Delta (the reference's alerts topic,
-    dsl/PriceAlertsApp.java:134); alert rows are threshold-filtered so
-    the driver-side footprint here is the alert table itself.
-    """
-    state: dict[tuple, dict] = {}
-
-    def upsert(batch_df: DataFrame, _batch_id: int) -> None:
-        for r in batch_df.collect():
-            d = r.asDict()
-            state[tuple(d[k] for k in key_cols)] = d
-
-    q = (
-        alerts.writeStream.foreachBatch(upsert)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.createDataFrame(list(state.values()), schema=alerts.schema)
-
-
-def run_append(
-    spark: SparkSession,
-    result: DataFrame,
-) -> DataFrame:
-    """Run an append-mode streaming DataFrame to completion, collecting
-    every emission.
-
-    Append emissions are final by contract (emit-once when the
-    watermark closes the group), so a plain accumulating collector is
-    batch-count-independent — no upsert or replace needed. At scale the
-    foreachBatch body becomes an append to Kafka/Delta; rows here are
-    threshold-filtered alerts.
-
-    Batches move as ARROW tables, not Row lists: toArrow() is one
-    vectorized transfer per micro-batch and the rebuild skips the
-    per-row verify/toInternal walk (measured ~2.3 s of pure driver
-    CPU for a 95k-row session result)."""
-    import pyarrow as pa
-
-    tables: list[pa.Table] = []
-
-    def append(batch_df: DataFrame, _batch_id: int) -> None:
-        t = batch_df.toArrow()
-        if t.num_rows:
-            tables.append(t)
-
-    q = (
-        result.writeStream.foreachBatch(append)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not tables:
-        return spark.createDataFrame([], schema=result.schema)
-    return spark.createDataFrame(pa.concat_tables(tables))
-
-
-def run_replace(
-    spark: SparkSession,
-    result: DataFrame,
-    mode: str = "complete",
-) -> DataFrame:
-    """Run a complete-mode streaming DataFrame to completion, keeping
-    the LAST trigger's full emission — batch-count-independent by
-    construction (complete mode re-emits the entire result every
-    trigger, so the final batch IS the final answer).
-
-    The complete-mode companion to ``run_upsert``: needed for
-    aggregations Spark refuses to run in update mode — session-window
-    aggregation rejects update (a session MERGE would have to retract
-    rows already emitted for the pre-merge sessions; complete
-    re-emission sidesteps retraction). At scale the foreachBatch body
-    becomes an overwrite of the downstream table; complete mode holds
-    full aggregate state, so it's viable when the (key × session)
-    space is bounded — the append+watermark path is the unbounded
-    alternative, with the documented availableNow holdback (sessions
-    still open when input ends are withheld until a later watermark
-    advance).
-    """
-    import pyarrow as pa
-
-    state: list[pa.Table] = []
-
-    def replace(batch_df: DataFrame, _batch_id: int) -> None:
-        state.clear()
-        state.append(batch_df.toArrow())
-
-    q = (
-        result.writeStream.foreachBatch(replace)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not state or state[0].num_rows == 0:
-        return spark.createDataFrame([], schema=result.schema)
-    return spark.createDataFrame(state[0])
-
-
 def windowed_distinct_stream(
     events_stream: DataFrame,
     key_col: str = "event_type",
@@ -287,59 +156,142 @@ def windowed_distinct_stream(
     )
 
 
-def run_batch_transform(spark, stream, transform, sink=None):
-    """Apply an arbitrary BATCH transformation to each micro-batch via
-    foreachBatch and collect every emission — the canonical escape for
-    stream-static operations Structured Streaming cannot express
-    declaratively (as-of/nearest joins, band joins, per-batch model
-    scoring). Spark's stream-static join supports only equi-keys; the
-    documented production pattern for anything richer is exactly this:
-    foreachBatch hands each micro-batch over as a plain DataFrame, the
-    batch operator runs against the static side, and results append
-    downstream (here: a collector; at scale: Kafka/Delta append).
+# --- collectors: run a stream to completion and hand its result back ----
+#
+# Structured Streaming has three output modes, and each has one keep
+# rule that makes the collected result independent of how the source
+# splits into micro-batches:
+# - append: emissions are final (emit-once), so keep every row;
+# - update: a later emission supersedes an earlier one for its key, so
+#   keep the last row per key;
+# - complete: every trigger re-emits the whole result, so keep the last
+#   batch.
+# All three run on one foreachBatch body (``_collect``) over one
+# availableNow drain (``_run_available``). At scale the body becomes an
+# append, keyed upsert or overwrite of a Kafka topic or Delta table;
+# here it gathers the (threshold-filtered) result on the driver.
 
-    CONTRACT: ``transform`` must be per-row stateless with respect to
-    batch boundaries (each output row a function of one input row plus
-    static data) — then the emission is batch-count-independent, same
-    as ``run_append``. Output schema is pinned by probing ``transform``
-    on an empty batch, so a zero-batch stream still returns a typed
-    empty DataFrame.
 
-    DRIVER-SIDE LIMIT: with the default ``sink=None`` this helper
-    accumulates every micro-batch's transformed rows on the driver
-    (``collect()`` into a Python list) so the registry twin can hand
-    one comparable DataFrame back — fine at fixture scale, NOT for
-    production volumes. At scale, pass ``sink`` (a callable taking the
-    transformed batch DataFrame) and each batch appends to storage
-    (Kafka/Delta/parquet) instead of the driver list; the return value
-    is then an empty typed DataFrame and the sink owns the output.
-    """
-    schema = transform(spark.createDataFrame([], stream.schema)).schema
-    # Batches move as ARROW tables (r12, guide §6 "Arrow for driver
-    # transfers"): collect() walked every transformed row through the
-    # Row/verify path on the driver (~1-2 s of pure driver CPU for a
-    # 100k-row batch); toArrow() is one vectorized transfer per
-    # micro-batch — the same fix run_append got in r9.
-    import pyarrow as pa
+def _run_available(writer: DataStreamWriter, output_mode: str) -> None:
+    """Process all input available at start as one or more micro-batches,
+    then stop — the package's one availableNow drain."""
+    writer.outputMode(output_mode).trigger(availableNow=True).start().awaitTermination()
 
-    tables: list[pa.Table] = []
+
+def run_to_memory(
+    spark: SparkSession,
+    alerts: DataFrame,
+    query_name: str,
+    mode: str = "update",
+) -> DataFrame:
+    """Run a streaming DataFrame to completion into a memory sink and
+    return the sink contents: every emission of every micro-batch, so
+    an update-mode stream shows its superseded rows too."""
+    _run_available(alerts.writeStream.format("memory").queryName(query_name), mode)
+    return spark.sql(f"SELECT * FROM {query_name}")
+
+
+def _collect(
+    spark: SparkSession,
+    result: DataFrame,
+    output_mode: str,
+    keep: Callable[[list[pa.Table], pa.Table], None],
+    transform: Callable[[DataFrame], DataFrame] | None = None,
+) -> tuple[pa.Table | None, StructType]:
+    """Drain ``result`` through foreachBatch; ``keep(kept, batch)``
+    updates the kept tables with each micro-batch in batch order.
+    Returns the kept rows as one Arrow table (None when no row was kept)
+    and the schema of the collected rows.
+
+    Batches move as Arrow tables, not Row lists: ``toArrow()`` is one
+    vectorized transfer per micro-batch, and the rebuild skips the
+    per-row verify/toInternal walk (measured ~2.3 s of pure driver CPU
+    for a 95k-row session result). Empty record batches are dropped:
+    ``createDataFrame`` of a table loses the rows that follow an empty
+    batch (Spark 4.1)."""
+    schema = result.schema
+    if transform is not None:
+        schema = transform(spark.createDataFrame([], schema)).schema
+    kept: list[pa.Table] = []
 
     def body(batch_df: DataFrame, _batch_id: int) -> None:
-        out = transform(batch_df)
-        if sink is not None:
-            sink(out)
-        else:
-            t = out.toArrow()
-            if t.num_rows:
-                tables.append(t)
+        keep(kept, (batch_df if transform is None else transform(batch_df)).toArrow())
 
-    q = (
-        stream.writeStream.foreachBatch(body)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not tables:
-        return spark.createDataFrame([], schema=schema)
-    return spark.createDataFrame(pa.concat_tables(tables), schema=schema)
+    _run_available(result.writeStream.foreachBatch(body), output_mode)
+    rows = [b for t in kept for b in t.to_batches() if b.num_rows]
+    return (pa.Table.from_batches(rows) if rows else None), schema
+
+
+def _keep_last(kept: list[pa.Table], batch: pa.Table) -> None:
+    kept[:] = [batch]
+
+
+def _frame(spark: SparkSession, table: pa.Table | None, schema: StructType) -> DataFrame:
+    """The collected rows as a DataFrame with exactly ``schema``."""
+    return spark.createDataFrame([] if table is None else table, schema=schema)
+
+
+def run_append(
+    spark: SparkSession,
+    result: DataFrame,
+    transform: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """Run an append-mode streaming DataFrame to completion, keeping
+    every emission.
+
+    ``transform`` runs a BATCH operation on each micro-batch first —
+    the escape for stream-static operations Structured Streaming cannot
+    express declaratively (as-of/nearest joins, band joins, per-batch
+    scoring; its stream-static join is equi-key only). It must be
+    per-row stateless with respect to batch boundaries (each output row
+    a function of one input row plus static data); then the result is
+    batch-count-independent. Its output schema is probed on an empty
+    batch, so a stream with no rows still returns it."""
+    table, schema = _collect(spark, result, "append", list.append, transform)
+    return _frame(spark, table, schema)
+
+
+def run_upsert(
+    spark: SparkSession,
+    result: DataFrame,
+    key_cols: list[str],
+) -> DataFrame:
+    """Run an update-mode streaming DataFrame to completion, keeping the
+    LAST emission per key: a later batch wins, and within a batch the
+    later row wins. Rows with a null key column share that key.
+
+    An update-mode memory sink accumulates every per-batch emission, so
+    a source that splits into >1 micro-batch (multi-file input,
+    maxFilesPerTrigger) would yield stale intermediate rows alongside
+    the final ones; micro-batches arrive in order, so the last row per
+    key is exactly the current aggregate value. Rows keep the order in
+    which their key first appeared."""
+    table, schema = _collect(spark, result, "update", list.append)
+    if table is not None:
+        at = table.append_column("__row", pa.array(np.arange(table.num_rows)))
+        last = (
+            at.select([*key_cols, "__row"])
+            .group_by(key_cols, use_threads=False)
+            .aggregate([("__row", "min"), ("__row", "max")])
+            .sort_by("__row_min")
+        )
+        table = table.take(last["__row_max"])
+    return _frame(spark, table, schema)
+
+
+def run_replace(spark: SparkSession, result: DataFrame) -> DataFrame:
+    """Run a complete-mode streaming DataFrame to completion, keeping
+    the LAST trigger's full emission: complete mode re-emits the entire
+    result every trigger, so the final batch IS the final answer.
+
+    Needed for aggregations Spark refuses to run in update mode:
+    session-window aggregation rejects update (a session MERGE would
+    have to retract rows already emitted for the pre-merge sessions;
+    complete re-emission sidesteps retraction). Complete mode holds
+    full aggregate state, so it is viable when the (key × session)
+    space is bounded; the append+watermark path is the unbounded
+    alternative, with the documented availableNow holdback (sessions
+    still open when input ends are withheld until a later watermark
+    advance)."""
+    table, schema = _collect(spark, result, "complete", _keep_last)
+    return _frame(spark, table, schema)

@@ -297,3 +297,74 @@ def test_only_session_modules_change_spark_confs():
         if call.search(line)
     )
     assert offenders == []
+
+
+def test_benchmark_timers_reach_the_collectors(spark, sf_dir, monkeypatch):
+    """A traced benchmark run times the collectors and the events stream
+    by patching module attributes (perfbench/layers.py ``TIMED``); the
+    drain's streaming queries must still call through those attributes,
+    or their per-layer timings read 0."""
+    import ast
+    import importlib
+
+    layers = Path(__file__).resolve().parents[1] / "perfbench" / "layers.py"
+    timed = next(
+        ast.literal_eval(node.value)
+        for node in ast.parse(layers.read_text()).body
+        if isinstance(node, ast.Assign) and getattr(node.targets[0], "id", "") == "TIMED"
+    )
+    targets = [
+        ("kafka_streams_homework_spark.queries.streaming", "run_upsert"),
+        ("kafka_streams_homework_spark.streaming", "run_append"),
+        ("kafka_streams_homework_spark.queries.streaming", "_events_stream"),
+    ]
+    assert set(targets) <= set(timed)
+    calls = {name: 0 for _, name in targets}
+
+    def counting(name, fn):
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    for module, name in targets:
+        mod = importlib.import_module(module)
+        monkeypatch.setattr(mod, name, counting(name, getattr(mod, name)))
+    queries = E.queries()
+    for q in ("streaming_price_alerts", "streaming_stateful_alerts"):
+        queries[q](spark, sf_dir).collect()
+    assert all(calls.values()), calls
+
+
+def _code_tokens(path: Path) -> str:
+    """A module's code with comments, strings (docstrings included) and
+    whitespace dropped, so a call reads the same however it is wrapped."""
+    import io
+    import tokenize
+
+    skip = {
+        tokenize.COMMENT,
+        tokenize.STRING,
+        tokenize.NL,
+        tokenize.NEWLINE,
+        tokenize.INDENT,
+        tokenize.DEDENT,
+        *(getattr(tokenize, t) for t in ("FSTRING_START", "FSTRING_MIDDLE", "FSTRING_END")
+          if hasattr(tokenize, t)),
+    }
+    tokens = tokenize.generate_tokens(io.StringIO(path.read_text()).readline)
+    return "".join(t.string for t in tokens if t.type not in skip)
+
+
+def test_streams_reach_the_driver_through_one_drain():
+    """One availableNow drain and one foreachBatch collector body: a new
+    streaming query picks a collector in streaming/price_alerts.py
+    instead of starting its own copy of the drain."""
+    pkg = Path(__file__).resolve().parents[1] / "kafka_streams_homework_spark"
+    code = {path.relative_to(pkg).as_posix(): _code_tokens(path) for path in pkg.rglob("*.py")}
+    triggers = {f: c.count("trigger(availableNow=True)") for f, c in code.items()}
+    assert {f: n for f, n in triggers.items() if n} == {"streaming/price_alerts.py": 1}
+    assert sorted(f for f, c in code.items() if ".foreachBatch(" in c) == [
+        "streaming/price_alerts.py"
+    ]

@@ -704,7 +704,7 @@ def test_streaming_ann_ingest_assignment_is_broadcast_map(spark, sf_dir):
     BROADCAST of the one-row nested centroid frame (stateless argmax
     map) — no shuffle of the vector stream, no streaming aggregation
     state."""
-    from kafka_streams_homework_spark.queries._shared import _emb_stream
+    from kafka_streams_homework_spark.queries._shared import _table_stream
     from kafka_streams_homework_spark.queries.streaming import (
         q_streaming_ann_ingest,  # noqa: F401 — the op under test
     )
@@ -732,7 +732,7 @@ def test_streaming_ann_ingest_assignment_is_broadcast_map(spark, sf_dir):
         ),
     )
     out = (
-        _emb_stream(spark, sf_dir)
+        _table_stream(spark, sf_dir, "embeddings")
         .crossJoin(F.broadcast(cdf))
         .select(
             "vec_id",

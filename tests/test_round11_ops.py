@@ -167,7 +167,7 @@ def test_streaming_funnel_matches_batch_across_batches(spark, tmp_path):
         .parquet(path)
     )
     pos = run_upsert(
-        spark, funnel_stateful(stream), ["user_id"], mode="update"
+        spark, funnel_stateful(stream), ["user_id"]
     )
     got = {r.user_id: r.reached for r in pos.collect()}
     assert got == {1: 3, 2: 2, 3: 0, 4: 1}

@@ -20,6 +20,7 @@ from kafka_streams_homework_spark.streaming import (
     dedup_stream,
     latest_by_key_stream,
     price_alerts_stream,
+    run_append,
     run_replace,
     run_to_memory,
     run_upsert,
@@ -31,7 +32,7 @@ EVENTS_SCHEMA = "user_id long, ts timestamp, value double"
 DIM_SCHEMA = "c_custkey long, c_name string"
 
 
-def _write_events(spark, tmp_path, batches):
+def _write_events(spark, tmp_path, batches, schema=EVENTS_SCHEMA):
     """Write each batch as its own parquet file so maxFilesPerTrigger=1
     replays them as separate micro-batches (deterministic watermark
     advancement — the TopologyTestDriver.advanceWallClockTime twin).
@@ -44,7 +45,7 @@ def _write_events(spark, tmp_path, batches):
     path = str(tmp_path / f"events-{uuid.uuid4().hex[:8]}")
     seen: set[str] = set()
     for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
             "append"
         ).parquet(path)
         current = set(glob.glob(f"{path}/*.parquet"))
@@ -54,9 +55,9 @@ def _write_events(spark, tmp_path, batches):
     return path
 
 
-def _stream(spark, path):
+def _stream(spark, path, schema=EVENTS_SCHEMA):
     return (
-        spark.readStream.schema(EVENTS_SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -109,7 +110,6 @@ def test_upsert_sink_is_batch_count_independent(spark, tmp_path, dim):
         spark,
         price_alerts_stream(_stream(spark, path), dim, mode="update"),
         ["alert_key", "window_start"],
-        mode="update",
     ).collect()
     assert len(out) == 1
     assert out[0].total_sum_per_minute == 200.0
@@ -364,7 +364,7 @@ def test_run_replace_session_agg_is_batch_count_independent(spark, tmp_path):
             "user_id", F.col("session_window.start").alias("start"), "total"
         )
     )
-    out = run_replace(spark, sess, mode="complete").collect()
+    out = run_replace(spark, sess).collect()
     got = {(r.user_id, r.start.minute): r.total for r in out}
     assert got == {(1, 0): 3.0, (1, 30): 4.0, (2, 0): 8.0}
 
@@ -633,7 +633,6 @@ def test_streaming_windowed_distinct_counts_across_batches(spark, tmp_path):
             window="1 minute",
         ),
         ["event_type", "window_start"],
-        mode="update",
     ).collect()
     by_window = {r.window_start: r.n_distinct for r in out}
     assert by_window[dt.datetime(2024, 1, 1, 0, 5)] == 3
@@ -676,16 +675,14 @@ def test_streaming_windowed_hll_within_error_of_exact(spark, sf_dir):
 
 
 def test_run_batch_transform_is_batch_count_independent(spark, tmp_path):
-    """run_batch_transform (the foreachBatch escape for stream-static
-    ops beyond equi-joins) must emit exactly the batch result however
-    the source splits into micro-batches: a per-row-stateless asof
+    """run_append with a per-batch transform (the foreachBatch escape
+    for stream-static ops beyond equi-joins) must emit exactly the batch
+    result however the source splits into micro-batches: a per-row-stateless asof
     lookup over three micro-batches equals the single-batch answer."""
     from pyspark.sql import functions as F
 
     from kafka_streams_homework_spark.operators import relational as R
-    from kafka_streams_homework_spark.streaming.price_alerts import (
-        run_batch_transform,
-    )
+    from kafka_streams_homework_spark.streaming.price_alerts import run_append
 
     path = _write_events(
         spark,
@@ -714,8 +711,8 @@ def test_run_batch_transform_is_batch_count_independent(spark, tmp_path):
 
     got = {
         (r.user_id, r.ts.minute, r.value): r.ref
-        for r in run_batch_transform(
-            spark, _stream(spark, path), lookup
+        for r in run_append(
+            spark, _stream(spark, path), transform=lookup
         ).collect()
     }
     # batch answer: event@0 -> ref 100; event@30 -> 101 (asof 20);
@@ -753,7 +750,7 @@ def test_kmv_stateful_state_merges_across_batches(spark, tmp_path):
         sketch = kmv_distinct_stateful(
             _stream(spark, path), group_col="user_id", id_col="value", k=64
         )
-        out = run_upsert(spark, sketch, ["g"], mode="update")
+        out = run_upsert(spark, sketch, ["g"])
         return {r.g: (r.n_sketch, r.kmax) for r in out.collect()}
 
     got_multi = run(multi)
@@ -805,7 +802,7 @@ def test_ohlc_stream_state_is_merge_order_safe(spark, tmp_path):
         for k, v in opts.items():
             reader = reader.option(k, v)
         agg = _ohlc_stream_agg(reader.parquet(path))
-        out = run_upsert(spark, agg, ["event_type", "bucket"], mode="update")
+        out = run_upsert(spark, agg, ["event_type", "bucket"])
         r = out.collect()
         assert len(r) == 1
         return (r[0].open, r[0].high, r[0].low, r[0].close, r[0].n_ticks)
@@ -1063,3 +1060,61 @@ def test_eight_partition_checkpoint_restarts_under_the_default(spark, tmp_path):
     for part in parts:
         names = set(os.listdir(os.path.join(state, part)))
         assert {"1.delta", "2.delta", "3.delta"} <= names, (part, sorted(names))
+
+
+_TYPED_SCHEMA = "k string, t timestamp, a array<double>, n long"
+_TYPED_BATCHES = [
+    [("a", ts(1), [1.0, 2.0], None), ("b", ts(2), [], 7)],
+    [("a", ts(3), [3.0], 8)],
+]
+
+
+@pytest.mark.parametrize("emit", [True, False], ids=["rows", "no-rows"])
+def test_collectors_return_the_stream_schema(spark, tmp_path, emit):
+    """Every collector hands back exactly the schema of what it drains
+    (the transformed schema when a transform is given) — a timestamp, an
+    array and a nullable column included — whether the stream emitted
+    rows or none."""
+    from pyspark.sql import functions as F
+
+    path = _write_events(spark, tmp_path, _TYPED_BATCHES, _TYPED_SCHEMA)
+
+    def stream():
+        df = _stream(spark, path, _TYPED_SCHEMA)
+        return df if emit else df.filter(F.col("k") == "none")
+
+    def widen(df):
+        return df.withColumn("m", F.size("a"))
+
+    per_key = stream().groupBy("k").agg(
+        F.max("t").alias("t"), F.collect_list("a").alias("as"), F.max("n").alias("n")
+    )
+    checks = [
+        ("append", run_append(spark, stream()), stream().schema, 3),
+        ("transform", run_append(spark, stream(), transform=widen), widen(stream()).schema, 3),
+        ("upsert", run_upsert(spark, stream(), ["k"]), stream().schema, 2),
+        ("replace", run_replace(spark, per_key), per_key.schema, 2),
+    ]
+    for name, out, schema, rows in checks:
+        assert out.schema == schema, name
+        assert out.count() == (rows if emit else 0), name
+
+
+def test_upsert_keeps_the_last_row_per_key_across_batches(spark, tmp_path):
+    """run_upsert over three one-file micro-batches keeps the last value
+    per key: a later batch wins, within a batch the later row wins, and
+    rows with a null key share one key. Rows keep the order in which
+    their key first appeared."""
+    schema = "k string, v long"
+    path = _write_events(
+        spark,
+        tmp_path,
+        [
+            [("a", 1), (None, 10), ("c", 5), ("c", 6)],
+            [("b", 3), (None, 11), ("a", 2)],
+            [("a", 4)],
+        ],
+        schema,
+    )
+    out = run_upsert(spark, _stream(spark, path, schema), ["k"]).collect()
+    assert [(r.k, r.v) for r in out] == [("a", 4), (None, 11), ("c", 6), ("b", 3)]
