@@ -3,10 +3,10 @@
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is executed to completion (count() on the result — forces
-the full plan without driver-side collect of wide rows). A warmup query
-initializes the JVM/session so measured times are plan+execute, not
-startup.
+Each query is timed through tools/qtime.py's loop: the session is
+warmed up first, so measured times are plan+execute, not startup, and
+every leg runs the query to completion on the noop sink. The full
+record goes to BENCH_LOCAL.json.
 """
 
 from __future__ import annotations
@@ -14,12 +14,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kafka_streams_homework_spark import queries as Q
-from kafka_streams_homework_spark.session import get_spark
+from tools import qtime
 
 BENCH_QUERIES = [
     "price_alerts",
@@ -347,19 +346,13 @@ def main() -> None:
     # recorded for completeness only.
     ncpus = os.cpu_count() or 1
     load_start = os.getloadavg()
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = qtime.start("bench", sf_dir)
     registry = Q.queries()
-
-    # warmup: touch the JVM + parquet footers
-    registry["source_scan"](spark, sf_dir).count()
 
     # median-of-3: robust to one-off box-contention spikes (the round
     # driver shares this machine) without rewarding a lucky fast run the
     # way best-of-N does. Per-query stddev is emitted so a reader can
     # separate noise from a real plan regression.
-    from kafka_streams_homework_spark.caching import release_caches
-
     runs_per_query = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
@@ -367,71 +360,22 @@ def main() -> None:
     min_s: dict[str, float] = {}
     stall_dumps: list[str] = []
 
-    # In-session stall watchdog (r10 verdict #1): BASELINE.md's
-    # round-10 closing leg recorded streaming_stateful_alerts at
-    # 20.9-25.6 s in-session vs 3.45 s quiet, same code — adjudicated
-    # "stall" but never root-caused because by the time anyone looked,
-    # the run was over. Arm per query once a first leg exists: when a
-    # later leg exceeds max(3x fastest-leg-so-far, 6 s), dump JVM
-    # thread stacks + GC heap + Python driver stacks MID-STALL via
-    # tools.stall_probe so the evidence lands in the artifact.
-    import threading
-
-    from tools.stall_probe import dump_all, jvm_pid
-
-    try:
-        _pid = jvm_pid(spark)
-    except Exception:
-        _pid = None
-
-    def timed_run(name: str, prior_min: float | None) -> float:
-        t0 = time.perf_counter()
-        done = threading.Event()
-        if _pid is not None and prior_min is not None:
-            arm = max(3 * prior_min, 6.0)
-
-            def watchdog() -> None:
-                k = 0
-                while not done.wait(timeout=0.5):
-                    if time.perf_counter() - t0 >= arm and k < 3:
-                        tag = f"bench-{int(time.time())}-{name}-d{k}"
-                        stall_dumps.append(dump_all(_pid, tag))
-                        k += 1
-                        if done.wait(timeout=3.0):
-                            break
-
-            threading.Thread(target=watchdog, daemon=True).start()
-        # noop write, not count(): count() lets Catalyst prune every
-        # column and answer map-only plans from parquet row-group
-        # metadata, so pure-projection queries (token_count, pii_scrub,
-        # importance_sample, ...) were timed as footer reads. The noop
-        # sink forces full evaluation of every output column and
-        # discards rows executor-side (no driver collect).
-        registry[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        done.set()
-        elapsed = time.perf_counter() - t0
-        # drop intra-query persists immediately: each run re-pays its
-        # own cache build, and a heavy query's cached table (e.g.
-        # dedup_ngram_jaccard's shingles) never squats on executor
-        # storage while later queries are timed
-        release_caches()
-        return elapsed
-
-    def sampled_runs(name: str, n: int, seed: list[float]) -> list[float]:
-        out = list(seed)
-        for _ in range(n):
-            out.append(timed_run(name, min(out) if out else None))
-        return out
-
     for name in BENCH_QUERIES:
-        samples = sorted(sampled_runs(name, runs_per_query, []))
+        run = qtime.legs(spark, registry[name], sf_dir, runs_per_query)
+        samples = sorted(leg.seconds for leg in run)
         # sub-second queries: ~50 ms of JVM jitter exceeds 10%, so buy
         # extra cheap samples to stabilize the median. Four extras
         # (r7, was two): the r6 artifact showed 0.3 s queries reading
         # 3x on sample-epoch contention (importance_sample sigma=0.24);
         # a 7-sample median rides out a 2-3 sample slow epoch.
         if samples[len(samples) // 2] < 1.0:
-            samples = sorted(sampled_runs(name, 4, samples))
+            run += qtime.legs(spark, registry[name], sf_dir, 4)
+            samples = sorted(leg.seconds for leg in run)
+        # BASELINE.md's round-10 closing leg recorded a 20.9-25.6 s
+        # in-session stall that was never root-caused; qtime's watchdog
+        # dumps JVM and Python stacks mid-stall so the evidence lands in
+        # the artifact
+        stall_dumps += [d for leg in run for d in leg.dumps]
         median = samples[len(samples) // 2]
         mean = sum(samples) / len(samples)
         sd = (sum((s - mean) ** 2 for s in samples) / len(samples)) ** 0.5
@@ -491,8 +435,8 @@ def main() -> None:
         "stddev": spreads,
         "legs": legs,
         "min_s": min_s,
-        # mid-stall evidence files (empty = no leg exceeded 3x its
-        # query's fastest leg; see the watchdog above)
+        # mid-stall evidence files (empty = no leg exceeded
+        # max(3x its query's fastest leg, 6 s); see tools/qtime.py)
         "stall_dumps": stall_dumps,
         "total_min_s": round(sum(min_s.values()), 3),
         "runs_per_query": runs_per_query,

@@ -51,8 +51,10 @@ def tracked_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     instead of recomputing. Therefore: a query's RETURNED DataFrame is
     only valid until the harness's next ``release_caches()`` call —
     re-invoke the query function to get a fresh plan (every in-repo
-    harness — bench.py, check_oracle, qtime — already rebuilds plans
-    per leg, which is what makes this trade safe).
+    harness — check_oracle, perfbench, the stall probe, and
+    tools/qtime.py's timing loop, which bench.py and the scale probe
+    use — already rebuilds plans per leg, which is what makes this
+    trade safe).
     """
     out = df.localCheckpoint(eager=eager)
     _TRACKED_CKPTS.append(out)

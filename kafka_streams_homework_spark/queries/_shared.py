@@ -19,6 +19,7 @@ Parity rules (keep Spark and oracle in lockstep):
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -91,15 +92,25 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 
 def register(name: str, oracle: str | None = None, description: str = ""):
+    """Register a query under ``name``. The registered function is a
+    wrapper that applies the engine's runtime confs to the caller's
+    session once before the body, so a query on an externally built
+    session (the driver's) plans with the same confs as one from
+    ``get_spark``; it replaces the decorated name in its module too."""
+
     def deco(fn: QueryFn) -> QueryFn:
-        REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle, description=description)
-        return fn
+        @functools.wraps(fn)
+        def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+            apply_runtime_confs(spark)
+            return fn(spark, sf_dir)
+
+        REGISTRY[name] = QuerySpec(fn=query, oracle=oracle, description=description)
+        return query
 
     return deco
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
     df = load_table(spark, sf_dir, name)
     # documents/embeddings feed compute-heavy per-row operators
     # (shingling, token scans, vector math); redistribute narrow scans

@@ -34,7 +34,6 @@ from kafka_streams_homework_spark.queries._shared import *  # noqa
     "as the batch twin (streaming/batch parity)",
 )
 def q_streaming_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     stream = _events_stream(spark, sf_dir).select("event_id", "user_id", "ts")
     orders = _t(spark, sf_dir, "orders")
     latest_orders = (
@@ -73,7 +72,6 @@ def q_streaming_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "checked against the SAME batch oracle (streaming/batch parity)",
 )
 def q_streaming_price_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     # _stream_session (r12): windowed-sum state ~1e4 (user, window)
     # groups — see _shared.py rationale
     qs = _stream_session(spark)
@@ -106,7 +104,6 @@ def q_streaming_price_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "latest_by_key (streaming/batch parity for S2/S4)",
 )
 def q_streaming_latest_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: one state row per user key
     ev = _events_stream(qs, sf_dir)
     agg = ev.groupBy("user_id").agg(
@@ -139,7 +136,6 @@ def q_streaming_latest_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_homework_spark.streaming import dedup_stream
 
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: dedup state = distinct key pairs
     ev = _events_stream(qs, sf_dir)
     out = dedup_stream(ev, ["user_id", "event_type"], ts_col="ts").select(
@@ -184,7 +180,6 @@ def q_streaming_stateful_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed_sum_stateful,
     )
 
-    apply_runtime_confs(spark)
     # _stream_session (r12): ~1.5k live (user, window) groups — a few
     # state-store instances are ample; see _shared.py rationale
     qs = _stream_session(spark)
@@ -222,7 +217,6 @@ def q_streaming_stateful_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_homework_spark.streaming import interval_join_streams
 
-    apply_runtime_confs(spark)
     # _stream_session (r12): stream-stream join buffers both sides in
     # per-partition state stores — see _shared.py rationale
     qs = _stream_session(spark)
@@ -298,7 +292,6 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_interval_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_homework_spark.streaming import interval_join_streams
 
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: join state, see _shared.py
     left = (
         _events_stream(qs, sf_dir)
@@ -351,7 +344,6 @@ def q_streaming_windowed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
         windowed_distinct_stream,
     )
 
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: id-set state per (type, window)
     stream = _events_stream(qs, sf_dir)
     out = windowed_distinct_stream(stream)
@@ -387,7 +379,6 @@ def q_streaming_windowed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
     "oracle as the batch twin (streaming/batch parity)",
 )
 def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: ~1e5 session-window state rows
     stream = _events_stream(qs, sf_dir)
     sess = R.sessionize(
@@ -452,7 +443,6 @@ def q_streaming_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame
 
     import os as _os
 
-    apply_runtime_confs(spark)
     staged = tempfile.mkdtemp(prefix="sess_append_")
     # Two r8-quiet-drift fixes (measured with cProfile + an isolated
     # stream-phase A/B):
@@ -564,7 +554,6 @@ def q_streaming_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame
     "(batch-count-independent); accuracy pinned vs exact in pytest",
 )
 def q_streaming_windowed_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: one HLL sketch per (type, hour)
     stream = _events_stream(qs, sf_dir)
     out = (
@@ -869,7 +858,6 @@ def q_avro_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "gaps-and-islands oracle as the batch twin",
 )
 def q_streaming_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: per-user streak session state
     stream = _events_stream(qs, sf_dir)
     days = stream.select(
@@ -925,7 +913,6 @@ TOPK_WINDOW_N = 3
     "same batch oracle shape as topk_per_group",
 )
 def q_streaming_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: |types| x hours count state
     stream = _events_stream(qs, sf_dir)
     counts = (
@@ -999,7 +986,6 @@ DECAY_BASE_EPOCH = 1704067200  # 2024-01-01T00:00:00Z, before the corpus
 def q_streaming_decayed_leaderboard(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: one state row per user
     stream = _events_stream(qs, sf_dir)
     sec = F.unix_timestamp(F.date_trunc("second", F.col("ts")))
@@ -1076,7 +1062,6 @@ def q_streaming_decayed_leaderboard(
     "the cum window partitions by day over <=491 bucket rows",
 )
 def q_streaming_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: (day, bucket) count state
     stream = _events_stream(qs, sf_dir)
     hist = (
@@ -1192,7 +1177,6 @@ def _ohlc_stream_agg(stream: DataFrame) -> DataFrame:
     "deterministic oracle as the batch twin",
 )
 def q_streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: (series, hour) OHLC state
     agg = _ohlc_stream_agg(_events_stream(qs, sf_dir))
     emitted = run_upsert(spark, agg, ["event_type", "bucket"])
@@ -1244,7 +1228,6 @@ def q_streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a pure map stage: scales horizontally with zero shuffle",
 )
 def q_streaming_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     stream = _table_stream(spark, sf_dir, "documents")
     return run_append(spark, T.quality_score(stream))
 
@@ -1289,7 +1272,6 @@ def q_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmv_distinct_stateful,
     )
 
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: one KMV sketch per event type
     stream = _events_stream(qs, sf_dir)
     sketch = kmv_distinct_stateful(stream, "event_type", "user_id", k=64)
@@ -1361,7 +1343,6 @@ def q_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mode via run_replace",
 )
 def q_streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: (type, day, bin) count state
     stream = _events_stream(qs, sf_dir)
     hist = (
@@ -1451,7 +1432,6 @@ NB_TOP_V = 1 << 16  # vocabulary cap for the broadcast NB model (OOV bucket)
     "pipelines",
 )
 def q_streaming_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     # no _stream_session here (r12): the scored stream is STATELESS
     # (stream-static join + projection, append mode — no state stores),
     # and the model-training aggregations behind the static side want
@@ -1636,7 +1616,6 @@ def _nb_scored_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "At 100 TB/day: a zero-shuffle map stage with one broadcast",
 )
 def q_streaming_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     events = _t(spark, sf_dir, "events")
     stats = events.groupBy(F.col("event_type").alias("s_type")).agg(
         F.avg("value").alias("mu"), F.stddev("value").alias("sigma")
@@ -1706,7 +1685,6 @@ def q_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         page_hinkley_stateful,
     )
 
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: one PH state row per type
     stream = _events_stream(qs, sf_dir)
     ph = page_hinkley_stateful(stream, "event_type", "ts", "value")
@@ -1770,7 +1748,6 @@ def q_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_oov_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_homework_spark.functions import tokens
 
-    apply_runtime_confs(spark)
     docs = _t(spark, sf_dir, "documents")
     occ = docs.select(F.explode(tokens("text")).alias("tok"))
     tot = occ.groupBy("tok").agg(F.count(F.lit(1)).alias("ct"))
@@ -1832,7 +1809,6 @@ def q_streaming_rate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         rate_gate_stateful,
     )
 
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: K=3 timestamps state per user
     stream = _events_stream(qs, sf_dir)
     out = rate_gate_stateful(stream)
@@ -1864,7 +1840,6 @@ def q_streaming_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         funnel_stateful,
     )
 
-    apply_runtime_confs(spark)
     qs = _stream_session(spark)  # r12: 3 scalars of state per user
     stream = _events_stream(qs, sf_dir)
     pos = run_upsert(spark, funnel_stateful(stream), ["user_id"])
@@ -1938,7 +1913,6 @@ ANN_INGEST_CELLS = 8
     "index (ivf_write_index layout); probes stay partition-pruned",
 )
 def q_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     emb = _t(spark, sf_dir, "embeddings")
     anchors = (
         emb.select(
@@ -2002,7 +1976,6 @@ def q_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "arithmetic, one Python crossing per micro-batch partition",
 )
 def q_streaming_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     stream = _table_stream(spark, sf_dir, "documents")
     return run_append(spark, M.decode_and_resize(M.to_media(stream)))
 
@@ -2060,7 +2033,6 @@ SCMS_TOPK = 20
     "SQL, so the row is oracle-HASH like its batch twin",
 )
 def q_streaming_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     # _stream_session (r12): state here is the 2048-cell counter
     # matrix — a few state-store instances are ample; see _shared.py
     # rationale

@@ -1834,7 +1834,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "composes this module's _bpe_encode_oracle chain",
 )
 def q_streaming_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     seg = T.bpe_train_merges(
         _corpus_words(spark, sf_dir), N_BPE_MERGES, return_segmentation=True
     )

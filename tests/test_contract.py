@@ -138,6 +138,18 @@ def test_entry_schema_is_stable(spark):
     assert kinds["total_sum_per_minute"] == "double"
 
 
+def test_every_registry_call_leaves_the_engine_confs_on_the_callers_session(spark, sf_dir):
+    """The registry applies the runtime confs once per call, on the
+    session it is handed; the flagship entry calls the same wrapper."""
+    from kafka_streams_homework_spark import queries as Q
+
+    clone = spark.newSession()
+    for call in (Q.queries()["price_alerts"], Q.q_price_alerts):
+        clone.conf.set("spark.sql.session.timeZone", "America/New_York")
+        call(clone, sf_dir)
+        assert clone.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
 def _jobs_run_by(spark, fn):
     """(fn(), number of Spark jobs fn started)."""
     sc = spark.sparkContext

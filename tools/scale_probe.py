@@ -31,15 +31,13 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from kafka_streams_homework_spark import queries as Q  # noqa: E402
-from kafka_streams_homework_spark.caching import release_caches  # noqa: E402
-from kafka_streams_homework_spark.session import get_spark  # noqa: E402
+from tools import qtime  # noqa: E402
 
 HEADLINE = [
     # the judge's heavy family (VERDICT r3 task 6)
@@ -126,23 +124,9 @@ def replicate(spark, sf_dir: str, base: str, n: int) -> None:
         )
 
 
-def _force(df) -> None:
-    # noop write: full evaluation of every output column, rows dropped
-    # executor-side (count() would let Catalyst answer map-only plans
-    # from parquet footers without computing a single expression)
-    df.write.format("noop").mode("overwrite").save()
-
-
-def warm_time(fn, spark, sf_dir: str, runs: int = 2) -> float:
-    _force(fn(spark, sf_dir))  # warm
-    release_caches()
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        _force(fn(spark, sf_dir))
-        best = min(best, time.perf_counter() - t0)
-        release_caches()
-    return best
+def warm_time(fn, spark, sf_dir: str) -> float:
+    """Min of 2 legs after one discarded warm leg."""
+    return min(leg.seconds for leg in qtime.legs(spark, fn, sf_dir, 3)[1:])
 
 
 def main() -> None:
@@ -150,8 +134,7 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     names = sys.argv[3:] or HEADLINE
     base = f"/tmp/scale_probe_{n}x"
-    spark = get_spark("scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = qtime.start("scale-probe", sf_dir)
     replicate(spark, sf_dir, base, n)
     reg = Q.queries()
     results: dict[str, dict[str, float]] = {}

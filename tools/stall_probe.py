@@ -5,16 +5,18 @@ runs of streaming_stateful_alerts vs 3.45 s on a quiet leg — same
 code, same box, unexplained. This harness reproduces the bench
 session shape (many streaming queries in one long-lived session,
 then the suspect query repeatedly) and captures evidence DURING any
-stall instead of adjudicating after the fact:
+stall instead of adjudicating after the fact.
 
-- a watchdog thread arms per rep; when elapsed > max(3x running
-  median, --arm-floor), it dumps, every 2 s until the rep finishes:
+``watch`` is the one watchdog: tools/qtime.py arms it on every timing
+leg after the first, and this probe arms it per rep at
+max(3x running median, 10 s). Once armed it dumps, at most 3 times,
+3 s apart, until the block finishes:
   * JVM thread dump (jcmd Thread.print) — state-store maintenance,
     Arrow channel, lock owners are all visible here
   * JVM GC heap info (jcmd GC.heap_info)
   * Python driver stacks (faulthandler.dump_traceback)
-  into /tmp/stall_probe/<ts>-rep<i>-dump<k>.txt
-- per-rep wall times print as they land; one JSON line at the end.
+into /tmp/stall_probe/<tag>-d<k>.txt. Per-rep wall times print as they
+land; one JSON line at the end.
 
 Usage: python tools/stall_probe.py [reps] [sf_dir] [--pollute N]
   reps      suspect-query repetitions (default 12)
@@ -27,6 +29,7 @@ Usage: python tools/stall_probe.py [reps] [sf_dir] [--pollute N]
 
 from __future__ import annotations
 
+import contextlib
 import faulthandler
 import json
 import os
@@ -35,11 +38,12 @@ import subprocess
 import sys
 import threading
 import time
+import warnings
+from collections.abc import Iterator
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_streams_homework_spark import queries as Q  # noqa: E402
-from kafka_streams_homework_spark.session import get_spark  # noqa: E402
 
 DUMP_DIR = "/tmp/stall_probe"
 
@@ -59,10 +63,16 @@ POLLUTERS = [
 SUSPECT = "streaming_stateful_alerts"
 
 
-def jvm_pid(spark) -> int:
-    return int(
-        spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
-    )
+def jvm_pid(spark) -> int | None:
+    """The driver JVM's pid, or None (with a RuntimeWarning: no stall
+    evidence can be taken) when it cannot be read."""
+    try:
+        return int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
+    except Exception as e:
+        warnings.warn(
+            f"stall watchdog off: cannot read the JVM pid: {e!r}", RuntimeWarning, stacklevel=2
+        )
+        return None
 
 
 def jcmd(pid: int, cmd: str) -> str:
@@ -92,7 +102,46 @@ def dump_all(pid: int, tag: str) -> str:
     return path
 
 
+@contextlib.contextmanager
+def watch(pid: int | None, arm_s: float, tag: str) -> Iterator[list[str]]:
+    """Watch the block: once it has run ``arm_s`` seconds, dump the
+    JVM's and the driver's stacks, at most 3 times, 3 s apart. Yields
+    the list the dump paths are appended to. ``pid=None`` watches
+    nothing."""
+    dumps: list[str] = []
+    if pid is None:
+        yield dumps
+        return
+    done = threading.Event()
+    started = time.monotonic()
+
+    def watchdog() -> None:
+        if done.wait(timeout=arm_s):
+            return
+        for k in range(3):
+            path = dump_all(pid, f"{tag}-d{k}")
+            dumps.append(path)
+            print(
+                f"  [watchdog] {time.monotonic() - started:.1f}s elapsed "
+                f"(arm {arm_s:.1f}s) -> {path}",
+                file=sys.stderr,
+                flush=True,
+            )
+            if done.wait(timeout=3.0):
+                return
+
+    thread = threading.Thread(target=watchdog, daemon=True)
+    thread.start()
+    try:
+        yield dumps
+    finally:
+        done.set()
+        thread.join(timeout=5)
+
+
 def main() -> None:
+    from tools import qtime  # not at module level: qtime imports watch from here
+
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     reps = int(args[0]) if len(args) > 0 else 12
     sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
@@ -101,7 +150,7 @@ def main() -> None:
         pollute = int(sys.argv[sys.argv.index("--pollute") + 1])
     arm_floor = 10.0  # never arm below this many seconds
 
-    spark = get_spark()
+    spark = qtime.start("stall-probe", sf_dir)
     pid = jvm_pid(spark)
     qs = Q.queries()
     print(f"jvm pid {pid}; pollute {pollute}; reps {reps} of {SUSPECT}")
@@ -118,31 +167,12 @@ def main() -> None:
     times: list[float] = []
     dumps: list[str] = []
     for i in range(reps):
-        done = threading.Event()
+        arm = max(3 * statistics.median(times), arm_floor) if times else arm_floor
         rep_start = time.monotonic()
-
-        def watchdog(idx: int = i, started: float = rep_start,
-                     flag: threading.Event = done) -> None:
-            med = statistics.median(times) if times else None
-            arm = max(3 * med, arm_floor) if med else arm_floor
-            k = 0
-            while not flag.wait(timeout=0.5):
-                if time.monotonic() - started >= arm:
-                    tag = (f"{int(time.time())}-rep{idx}-dump{k}")
-                    p = dump_all(pid, tag)
-                    dumps.append(p)
-                    print(f"  [watchdog] {time.monotonic() - started:.1f}s "
-                          f"elapsed (arm {arm:.1f}s) -> {p}", flush=True)
-                    k += 1
-                    if flag.wait(timeout=2.0):
-                        break
-
-        w = threading.Thread(target=watchdog, daemon=True)
-        w.start()
-        qs[SUSPECT](spark, sf_dir).collect()
-        done.set()
-        w.join(timeout=5)
+        with watch(pid, arm, f"{int(time.time())}-rep{i}") as found:
+            qs[SUSPECT](spark, sf_dir).collect()
         dt = time.monotonic() - rep_start
+        dumps += found
         times.append(dt)
         print(f"rep {i + 1}/{reps}: {dt:.2f}s", flush=True)
 
