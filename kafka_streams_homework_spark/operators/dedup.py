@@ -15,7 +15,8 @@ all downstream joins/intersections run on int64s.
 Scale design (100 TB corpus):
 - ngram_jaccard_pairs: exact, with AllPairs prefix filtering — the
   candidate join runs only on each doc's globally-rarest shingles, so
-  fanout stays bounded; boilerplate shingles never join.
+  fanout stays bounded; boilerplate shingles never join — and PPJoin's
+  positional filter on those joins.
 - minhash_lsh_pairs: signature is k minima of seeded xxhash64 — one
   narrow projection; banding turns O(n²) verification into bucket
   joins. The band-bucket join key is (band_idx, band_hash), which
@@ -31,6 +32,7 @@ Scale design (100 TB corpus):
 from __future__ import annotations
 
 import warnings
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -204,9 +206,11 @@ def _verify_jaccard(candidates: DataFrame, sh: DataFrame, threshold: float) -> D
 def _rarest_prefixes(exploded, threshold: float):
     """AllPairs prefix selection shared by the Jaccard and containment
     joins: rank each doc's shingles globally-rarest-first and keep the
-    pigeonhole prefix |prefix| = n_sh - ceil(tau * n_sh) + 1. One
-    global frequency agg + one row_number window (shuffle by doc_id);
-    no per-doc array materialization."""
+    pigeonhole prefix |prefix| = n_sh - ceil(tau * n_sh) + 1, with each
+    shingle's 1-based rank as ``pos`` (the Jaccard join's positional
+    filter reads it; containment ignores it). One global frequency
+    agg + one row_number window (shuffle by doc_id); no per-doc array
+    materialization."""
     freq = exploded.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("h").asc())
     prefix_len = (
@@ -214,9 +218,9 @@ def _rarest_prefixes(exploded, threshold: float):
     ).cast("int")
     return (
         exploded.join(freq, "h")
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= prefix_len)
-        .select("doc_id", "n_sh", "h")
+        .withColumn("pos", F.row_number().over(w))
+        .filter(F.col("pos") <= prefix_len)
+        .select("doc_id", "n_sh", "h", "pos")
     )
 
 
@@ -241,6 +245,18 @@ def ngram_jaccard_pairs(
     are then verified with the exact shingle-set intersection, so the
     result is identical to the naive O(n²) computation.
 
+    PPJoin's positional filter (Xiao et al., "Efficient Similarity
+    Joins for Near Duplicate Detection", WWW'08) prunes the prefix
+    collisions further. J(A,B) ≥ τ needs an overlap of at least
+    ⌈τ(|A|+|B|)/(1+τ)⌉; a shingle at rank pos_A in A and pos_B in B
+    leaves at most 1 + min(|A|-pos_A, |B|-pos_B) shingles to share from
+    there on. The first common shingle of a true pair lies in both
+    prefixes and passes that test, and a candidate survives when any of
+    its prefix matches passes, so no pair is lost. The test runs on
+    τ's decimal literal in exact decimal arithmetic: a float ceil would
+    round τ(|A|+|B|)/(1+τ) = 28 (τ = 0.8, |A|+|B| = 63) up to 29 and
+    drop a pair whose overlap equals the bound.
+
     Plan shape at 100 TB: one agg for global shingle frequencies, one
     per-doc sort+slice for prefixes, an equi-join on rare (thus
     low-fanout) int64 keys, and a verify join against the persisted
@@ -254,14 +270,20 @@ def ngram_jaccard_pairs(
     # Length filter (also AllPairs): J(A,B) ≥ τ forces
     # τ·|A| ≤ |B| ≤ |A|/τ — applied inside the candidate join it
     # prunes most prefix collisions before the distinct+verify.
+    # Positional filter (PPJoin): see the docstring.
     a, b = prefixes.alias("a"), prefixes.alias("b")
+    tau = F.lit(Decimal(str(float(threshold))))
+    rest = F.least(
+        F.col("a.n_sh") - F.col("a.pos"), F.col("b.n_sh") - F.col("b.pos")
+    )
     candidates = (
         a.join(
             b,
             (F.col("a.h") == F.col("b.h"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             & (F.col("b.n_sh") >= F.ceil(F.lit(threshold) * F.col("a.n_sh")))
-            & (F.col("b.n_sh") <= F.floor(F.col("a.n_sh") / F.lit(threshold))),
+            & (F.col("b.n_sh") <= F.floor(F.col("a.n_sh") / F.lit(threshold)))
+            & ((1 + tau) * (1 + rest) >= tau * (F.col("a.n_sh") + F.col("b.n_sh"))),
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
@@ -329,11 +351,16 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Collapse near-dup pairs into clusters; elect a canonical doc.
 
     Connected components by min-label propagation: every node starts
-    labeled with itself; each iteration every node takes the min label
-    among itself and its neighbors, until a fixpoint. Iterations needed
-    = graph diameter — near-dup clusters are shallow (dups of dups of
-    one original), so this converges in a handful of rounds; the
-    driver only ever sees a changed-row *count* per round.
+    labeled with itself; each round every node takes the min label
+    among itself and its neighbors, until a round changes no label.
+    Round 1 needs no labels table: from the self-labels it is
+    least(node, min(neighbor)), one aggregate over the edges. Rounds
+    needed = graph diameter — near-dup clusters are shallow (dups of
+    dups of one original): a star or clique around its smallest id is
+    final after round 1, so the pairs of a dedup pass finish with one
+    convergence count. The driver only ever sees a changed-row *count*.
+    ``max_iters`` bounds the rounds, round 1 included; labels still
+    changing in the last round raise a RuntimeWarning.
 
     Output: (doc_id, cluster_id [= min doc_id in the component],
     is_canonical). The keep-set for a dedup pipeline is
@@ -345,21 +372,25 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     # r11 (guide §2.4): edges checkpointed pre-partitioned + pre-sorted
     # on the per-round join key dst — every round then streams the
     # materialized edge RDD through the sort-merge join and only the
-    # node-sized label table shuffles. The round itself is reformulated
-    # as union+min-aggregate (messages ∪ own label, one groupBy) —
-    # min(own, min(neighbors)) unchanged — which drops the old
-    # join-back-to-labels third exchange.
+    # node-sized label table shuffles. Both orientations come from ONE
+    # read of `pairs` (explode of a 2-struct array): a union of two
+    # selects runs the whole upstream pairs plan (candidate join +
+    # verify) once per branch. distinct() stays, since callers may
+    # pass both orientations. The round itself is union+min-aggregate
+    # (messages ∪ own label, one groupBy) — min(own, min(neighbors)).
     edges = tracked_checkpoint(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                    F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
         .distinct()
         .repartition("dst")
         .sortWithinPartitions("dst")
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
     )
 
     def one_round(lbls):
@@ -372,33 +403,45 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
             .agg(F.min("label").alias("label"))
         )
 
-    # Batch `check_every` propagation rounds between convergence checks:
-    # the check (a count action) is the per-round fixed cost that
-    # dominates on shallow dup graphs — near-dup components converge in
-    # 2-4 rounds, so checking every round doubles the driver round-trips
-    # for nothing. Extra rounds past the fixpoint are no-ops on the data.
-    # localCheckpoint (eager), not persist: an iterative loop's lineage
+    # `check_every` propagation rounds run between convergence checks,
+    # and each check compares the LAST TWO rounds of its batch, so a
+    # round that changes no label ends the loop. Measured with the
+    # ngram_jaccard_pairs components of the registry-mix fixture (625
+    # pairs), sf0.01 (22 pairs, 1 triple) and sf0.1 (223 pairs,
+    # 9 triples, 1 quadruple): 1 count action each with check_every 1
+    # AND with 2, since every component is final after round 1. So 1:
+    # it reaches that count with one round fewer, and its check reads
+    # the checkpointed labels instead of recomputing the batch's
+    # second-to-last round. 2 would save counts only on deeper
+    # (chain-like) components.
+    # localCheckpoint (lazy), not persist: an iterative loop's lineage
     # otherwise DOUBLES per round (labels feeds both sides of the next
     # join), and while persist caches the DATA, the logical plan keeps
     # the full unrolled history — plan metadata grows exponentially and
     # every downstream explain/canonicalization pays for it (the audit
     # once counted 12001 display-exchanges in split_leakage_free's
     # plan). Checkpointing truncates the plan to the materialized
-    # partitions each round — the standard iterative-algorithm hygiene
+    # partitions each batch — the standard iterative-algorithm hygiene
     # (at 100 TB use reliable checkpoint storage instead of executor-
     # local blocks to keep fault recovery).
-    check_every = 2
-    changed = 0
-    iters_done = 0
+    check_every = 1
+    changed = None
     # AQE off for the loop (r12, bpe_train/kcore finding): the rounds
     # run over bounded edge/label tables through pre-partitioned
     # checkpoints — AQE only decomposes each convergence count into
     # sequential stage-jobs with ~0.1 s driver gaps each.
     with bounded_loop(pairs.sparkSession):
+        labels = (
+            edges.groupBy("src")
+            .agg(F.least(F.col("src"), F.min("dst")).alias("label"))
+            .select(F.col("src").alias("node"), "label")
+            .localCheckpoint(eager=False)
+        )
+        iters_done = 1
         while iters_done < max_iters:
-            stepped = labels
+            prev = stepped = labels
             for _ in range(min(check_every, max_iters - iters_done)):
-                stepped = one_round(stepped)
+                prev, stepped = stepped, one_round(stepped)
                 iters_done += 1
             # LAZY checkpoint: the convergence count is the first action
             # on the new labels and materializes them en route — one
@@ -409,7 +452,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
             new_labels = stepped.localCheckpoint(eager=False)
             changed = (
                 new_labels.alias("n")
-                .join(labels.alias("o"), "node")
+                .join(prev.alias("o"), "node")
                 .filter(F.col("n.label") != F.col("o.label"))
                 .count()
             )
@@ -417,6 +460,8 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
             labels = new_labels
             if changed == 0:
                 break
+        if changed is None:  # max_iters <= 1: round 1 was never checked
+            changed = labels.filter(F.col("node") != F.col("label")).count()
     release_checkpoint(edges)
     if changed > 0:
         # a component's diameter exceeded max_iters: labels are NOT a

@@ -148,11 +148,24 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     has far more splits than cores and this is a no-op — the check is
     on the actual scan partitioning, so no shuffle is added where the
     source parallelism suffices.
+
+    The width is read from the physical plan, never from ``df.rdd``:
+    under AQE building a frame's RDD runs every exchange upstream of it
+    (spreading an already spread corpus would shuffle it once more just
+    to count partitions). A frame with an exchange has the width the
+    plan states for it (a round-robin ``repartition(n)`` keeps n; AQE
+    leaves user repartitions alone) and counts as wide when the root
+    does not state one; a frame without one has its scan's split count,
+    which building the RDD works out on the driver.
     """
     try:
         target = partitions or df.sparkSession.sparkContext.defaultParallelism
-        current = df.rdd.getNumPartitions()
-    except Exception:  # Spark Connect: no sparkContext/.rdd — leave as-is
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            current = plan.inputPlan().outputPartitioning().numPartitions() or target
+        else:
+            current = plan.execute().getNumPartitions()
+    except Exception:  # Spark Connect: no sparkContext/_jdf — leave as-is
         return df
     if current >= target:
         return df

@@ -380,3 +380,66 @@ def test_streams_reach_the_driver_through_one_drain():
     assert sorted(f for f, c in code.items() if ".foreachBatch(" in c) == [
         "streaming/price_alerts.py"
     ]
+
+
+def test_spread_reads_the_width_without_running_a_job(spark, sf_dir):
+    """Under AQE, `df.rdd` on a frame with an exchange runs that
+    exchange. spread reads the width from the plan instead: spreading a
+    spread corpus starts no job, and the shingle substrate starts only
+    the one that shuffles the corpus text (AQE runs the spread exchange's
+    map stage when the lazy checkpoint builds its RDD)."""
+    from kafka_streams_homework_spark.operators.dedup import _doc_shingle_hashes
+    from kafka_streams_homework_spark.sources.batch import spread
+
+    docs = load_table(spark, sf_dir, "documents")  # the schema job, once
+    assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    twice, n_jobs = _jobs_run_by(spark, lambda: spread(spread(load_table(spark, sf_dir, "documents"))))
+    assert n_jobs == 0
+    assert twice.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    caching.release_caches()  # empties the substrate memo
+    _, n_jobs = _jobs_run_by(
+        spark, lambda: _doc_shingle_hashes(spread(load_table(spark, sf_dir, "documents")), 3)
+    )
+    assert n_jobs == 1
+    caching.release_caches()
+
+
+def test_dedup_clusters_ends_a_pairs_only_graph_with_one_count(spark, monkeypatch):
+    """Round 1 (one aggregate) labels every pair with its smaller id, so
+    round 2 changes nothing and its count ends the loop."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from kafka_streams_homework_spark.operators.dedup import dedup_clusters
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (5, 3), (8, 9), (12, 10)], "doc_a long, doc_b long"
+    )
+    counts = []
+    count = DataFrame.count
+    monkeypatch.setattr(DataFrame, "count", lambda df: counts.append(1) or count(df))
+    out = dedup_clusters(pairs)
+    monkeypatch.undo()
+    assert len(counts) == 1
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 1, True), (2, 1, False), (3, 3, True), (5, 3, False),
+        (8, 8, True), (9, 8, False), (10, 10, True), (12, 10, False),
+    ]
+
+
+def test_dedup_cluster_sizes_job_count(spark, sf_dir):
+    """13 jobs for a warm dedup_cluster_sizes on sf0.001:
+    - 9 while the query is built: AQE runs the pairs plan's shuffle
+      stages, one job each, when dedup_clusters' lazy edges checkpoint
+      builds its RDD (spread adds none: it reads widths from the plan);
+    - 1 convergence count: round 2 against round 1 (AQE off), since
+      round 1 already labels every component with its minimum;
+    - 3 when the result is collected: the two size aggregates' stages.
+    A new job here is a new driver round trip in every dedup pass."""
+    q = E.queries()["dedup_cluster_sizes"]
+    q(spark, sf_dir).collect()  # schema memo and first-use work
+    caching.release_caches()
+    df, n_build = _jobs_run_by(spark, lambda: q(spark, sf_dir))
+    rows, n_collect = _jobs_run_by(spark, df.collect)
+    caching.release_caches()
+    assert sorted(tuple(r) for r in rows) == [(2, 19), (3, 1), (4, 1)]
+    assert (n_build, n_collect) == (10, 3)

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -120,25 +121,115 @@ def test_ngram_jaccard_prefix_filter_is_exact(spark, texts):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    tau = 0.5
-    got = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in D.ngram_jaccard_pairs(docs, 2, tau).collect()
-    }
 
     def shingle_set(t: str) -> set[tuple[str, str]]:
         tok = t.lower().split(" ")
         return {(tok[i], tok[i + 1]) for i in range(len(tok) - 1)}
 
-    expect = {}
     sets = {i: shingle_set(t) for i, t in enumerate(texts)}
-    for a in sets:
-        for b in sets:
-            if a < b and sets[a] and sets[b]:
-                j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
-                if round(j, 6) >= tau:
-                    expect[(a, b)] = round(j, 6)
+    for tau in (0.5, 0.8):
+        got = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in D.ngram_jaccard_pairs(docs, 2, tau).collect()
+        }
+        expect = {}
+        for a in sets:
+            for b in sets:
+                if a < b and sets[a] and sets[b]:
+                    j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+                    if round(j, 6) >= tau:
+                        expect[(a, b)] = round(j, 6)
+        assert got == expect, tau
+
+
+def test_ngram_jaccard_keeps_a_pair_at_the_exact_positional_bound(spark):
+    """J(A,B) = τ = 0.8 with B inside A: the pair's only prefix match
+    leaves exactly the required overlap ⌈τ(|A|+|B|)/(1+τ)⌉, so the
+    positional filter keeps it only when it never rounds that bound up.
+    Sizes 5+4 (bound 4) and 35+28 (bound 28: in floats 0.8·63/1.8
+    comes out just above 28 and its ceil is 29)."""
+    for n_a, n_b in ((5, 4), (35, 28)):
+        words = [f"w{i}" for i in range(n_a + 1)]  # n_a distinct bigrams
+        docs = spark.createDataFrame(
+            [(1, " ".join(words)), (2, " ".join(words[: n_b + 1]))],
+            "doc_id long, text string",
+        )
+        got = [tuple(r) for r in D.ngram_jaccard_pairs(docs, 2, 0.8).collect()]
+        assert got == [(1, 2, 0.8)], (n_a, n_b)
+
+
+@st.composite
+def cc_graphs(draw):
+    """Disjoint chains, stars and cycles on shuffled ids (so a star's
+    centre is rarely its minimum and a chain's minimum sits anywhere),
+    plus duplicated and reversed copies of some of their edges."""
+    shapes = draw(
+        st.lists(
+            st.tuples(st.sampled_from(["chain", "star", "cycle"]), st.integers(2, 7)),
+            min_size=1,
+            max_size=4,
+        )
+    )
+    total = sum(k for _, k in shapes)
+    ids = draw(st.permutations(range(1, 2 * total + 1)))
+    edges, at = [], 0
+    for kind, k in shapes:
+        nodes = ids[at : at + k]
+        at += k
+        if kind == "star":
+            edges += [(nodes[0], v) for v in nodes[1:]]
+        else:
+            edges += list(zip(nodes, nodes[1:]))
+            if kind == "cycle":
+                edges.append((nodes[-1], nodes[0]))
+    copies = draw(st.lists(st.sampled_from(edges), max_size=4))
+    flips = draw(st.lists(st.sampled_from(edges), max_size=4))
+    return edges + copies + [(b, a) for a, b in flips]
+
+
+def _union_find_min_labels(edges) -> dict[int, int]:
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(cc_graphs())
+def test_dedup_clusters_equals_union_find(spark, edges):
+    """Each node's cluster is its component's minimum id, whatever the
+    shape, id order or edge duplication; only that minimum is canonical."""
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = {
+        r.doc_id: (r.cluster_id, r.is_canonical)
+        for r in D.dedup_clusters(pairs).collect()
+    }
+    expect = {n: (m, n == m) for n, m in _union_find_min_labels(edges).items()}
     assert got == expect
+
+
+def test_dedup_clusters_warns_on_a_chain_longer_than_max_iters(spark):
+    # 1-2-...-8 needs 7 rounds for label 1 to reach node 8
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 8)], "doc_a long, doc_b long"
+    )
+    with pytest.warns(RuntimeWarning, match="did not converge in 4 iterations"):
+        D.dedup_clusters(pairs, max_iters=4).collect()
+    for max_iters in (1, 2):
+        with pytest.warns(RuntimeWarning, match="did not converge"):
+            D.dedup_clusters(pairs, max_iters=max_iters).collect()
 
 
 resample_case = st.lists(

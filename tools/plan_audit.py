@@ -70,9 +70,10 @@ SKIP = {
     "streaming_dedup": "runs a Structured Streaming job "
     "(dropDuplicatesWithinWatermark; batch twin dedup_exact/DISTINCT)",
     "sink_write": "writes parquet then scans it (plan ≡ price_alerts + scan)",
-    "dedup_clusters": "iterative min-label propagation — per round: 1 join + "
-    "1 groupBy, each round's labels cached; explain would print the "
-    "unrolled (display-only) lineage",
+    "dedup_clusters": "iterative min-label propagation — round 1 is one "
+    "aggregate over the edges, each later round 1 join + 1 groupBy, each "
+    "round's labels a local checkpoint; explain would print the unrolled "
+    "(display-only) lineage",
     "knn_ivf_kmeans": "iterative Lloyd fit (driver holds only centroids) + "
     "one probe join — probe plan ≡ knn_ivf",
 }
