@@ -24,6 +24,8 @@ Scale design (100 TB corpus):
 - simhash: 64-bit signature per doc in one aggregation; near-dup =
   small Hamming distance, candidate generation by 4×16-bit band
   equality (any pair within Hamming distance 3 shares ≥1 band).
+- band_pairs: the one banded (band, bucket) candidate self-join; the
+  MinHash, SimHash, cosine-LSH and image-hash operators all call it.
 - the persisted shingle table is (doc_id, array<long>) — at 100 TB
   this is ~2 orders of magnitude smaller than the corpus text; use
   StorageLevel.DISK_ONLY there if memory-pressured.
@@ -482,6 +484,47 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Banded candidate join
+# ---------------------------------------------------------------------------
+
+
+def band_pairs(sig: DataFrame, id_col: str, keys: "F.Column", *carry: str) -> DataFrame:
+    """Candidate pairs of rows that share at least one (band, bucket):
+    the banded self-join of every LSH and Hamming near-dup operator.
+
+    `keys` is an array<struct<band, bucket>> expression over `sig`'s
+    columns; each row explodes to its keys and the two sides join on
+    equality of (band, bucket) with `{id_col}_a < {id_col}_b`, so
+    candidate generation is a shuffle on the band keys, never a
+    product. A null bucket matches nothing, and the same bucket value in
+    two different bands is no collision. A pair that collides in
+    several bands comes back once.
+
+    Returns `{id_col}_a`, `{id_col}_b` and each `carry` column from both
+    rows as `{c}_a` / `{c}_b`; the caller's verify or Hamming filter
+    reads them. `sig` holds one row per id.
+    """
+    cols = [id_col, *carry]
+    rows = sig.select(*cols, F.explode(keys).alias("k")).select(
+        *cols, "k.band", "k.bucket"
+    )
+    a, b = rows.alias("a"), rows.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            *[F.col(f"a.{c}").alias(f"{c}_a") for c in cols],
+            *[F.col(f"b.{c}").alias(f"{c}_b") for c in cols],
+        )
+        .distinct()
+    )
+
+
+# ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
@@ -524,20 +567,8 @@ def minhash_lsh_pairs(
         )
         for b in range(bands)
     ]
-    buckets = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
-
-    a, b = buckets.alias("a"), buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    candidates = band_pairs(sig, "doc_id", F.array(*band_cols)).select(
+        F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
     )
     return _verify_jaccard(candidates, sh, threshold)
 
@@ -591,29 +622,14 @@ def simhash_pairs(
         )
         for i in range(4)
     ]
-    buckets = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.array(*band_cols)).alias("bb"),
-    ).select("doc_id", "simhash", "bb.band", "bb.bucket")
-
-    a, b = buckets.alias("a"), buckets.alias("b")
-    hamming = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    )
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        band_pairs(sig, "doc_id", F.array(*band_cols), "simhash")
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+            F.col("doc_id_a").alias("doc_a"),
+            F.col("doc_id_b").alias("doc_b"),
             hamming.alias("hamming"),
         )
-        .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
 
@@ -680,24 +696,14 @@ def simhash_pairs_md5(
         )
         for i in range(4)
     ]
-    buckets = sigs.select(
-        "doc_id", "sig", F.explode(F.array(*band_cols)).alias("bb")
-    ).select("doc_id", "sig", "bb.band", "bb.bucket")
-    a, b = buckets.alias("a"), buckets.alias("b")
-    hamming = F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))
+    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        band_pairs(sigs, "doc_id", F.array(*band_cols), "sig")
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+            F.col("doc_id_a").alias("doc_a"),
+            F.col("doc_id_b").alias("doc_b"),
             hamming.cast("int").alias("hamming"),
         )
-        .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
 
@@ -759,22 +765,8 @@ def minhash_lsh_pairs_md5(
         )
         for b in range(bands)
     ]
-    buckets = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
-    a, b = buckets.alias("a"), buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
+    candidates = band_pairs(sig, "doc_id", F.array(*band_cols)).select(
+        F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
     )
     # exact verify on the STRING shingle sets (portable: the oracle
     # re-runs the identical intersection on list_distinct shingles)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_homework_spark.functions import cosine_similarity
+from kafka_streams_homework_spark.operators.dedup import band_pairs
 from kafka_streams_homework_spark.session import bounded_loop
 
 
@@ -509,10 +510,14 @@ def cosine_pairs_lsh(
     no blocking scheme can both prune and keep recall; use the exact
     blocked op there, and LSH/cells for true near-dup thresholds.
 
-    Scale: the signature is a per-row projection over plan-literal
-    hyperplanes (no shuffle); candidates come from equality joins on
-    uniform (band, bucket) int64 keys; embeddings shuffle only for the
-    candidate verify join, never all-pairs.
+    Each band's bucket is its r sign bits read as one integer
+    (`_band_bucket_expr`), so two vectors share a bucket exactly when
+    their band's bits agree; candidates come from `dedup.band_pairs`.
+
+    Scale: the signature is a per-row projection over a broadcast
+    hyperplane matrix (no shuffle); candidates come from equality joins
+    on (band, bucket) keys; embeddings shuffle only for the candidate
+    verify join, never all-pairs.
     """
     first = embeddings.select(F.size("embedding").alias("d")).first()
     if first is None:
@@ -529,30 +534,9 @@ def cosine_pairs_lsh(
             F.col("embedding").cast("array<double>"), F.col("planes_mat")
         ).alias("sig"),
     )
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                *[F.col("sig")[b * bits_per_band + r] for r in range(bits_per_band)]
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    buckets = sig.select(
-        "vec_id", F.explode(F.array(*band_cols)).alias("bb")
-    ).select("vec_id", "bb.band", "bb.bucket")
-
-    a, b = buckets.alias("a"), buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-        .distinct()
-    )
+    candidates = band_pairs(
+        sig, "vec_id", _band_bucket_expr(bands, bits_per_band)
+    ).select(F.col("vec_id_a").alias("id_a"), F.col("vec_id_b").alias("id_b"))
     ea = embeddings.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a")
     )
@@ -596,7 +580,9 @@ def _band_bucket_expr(bands: int, bits_per_band: int) -> "F.Column":
     ONE parsed expression instead of bands x bits_per_band py4j
     Column constructions (which cost ~3 s of driver chatter per call
     site at 32x4; the parse: milliseconds). The MSB-first fold
-    acc*2+x reproduces sum(sig[b*k+r] * 2^(k-1-r)) exactly."""
+    acc*2+x reproduces sum(sig[b*k+r] * 2^(k-1-r)) exactly, so the
+    bucket is injective on a band's bit tuples. The band keys of both
+    cosine pair operators and of knn_lsh_md5."""
     return F.expr(
         f"transform(sequence(0, {bands - 1}), b -> named_struct("
         f"'band', b, 'bucket', aggregate(slice(sig, "
@@ -613,16 +599,15 @@ def cosine_pairs_lsh_md5(
 ) -> DataFrame:
     """Random-hyperplane LSH pairs, ENGINE-PORTABLE and therefore
     oracle-HASH-checked end to end (cosine_pairs_lsh stays rows-only:
-    numpy Gaussian planes + xxhash64 buckets are Spark-private).
+    its numpy Gaussian planes are Python-private).
 
-    Identical pipeline: sign-bit signature over plan-literal
+    Identical pipeline: sign-bit signature over broadcast
     hyperplanes → banded candidate equi-join → exact cosine verify
-    (no false positives; banding affects recall only). Differences
-    are purely representational: md5-fraction hyperplanes
-    (md5_hyperplanes) and the 4-bit band bucket kept as the literal
-    integer 8b₀+4b₁+2b₂+b₃ instead of an xxhash64 — both replayable
-    in ANSI SQL, so DuckDB recomputes signatures, banding, collision
-    AND verification exactly.
+    (no false positives; banding affects recall only), with the same
+    4-bit band bucket, the literal integer 8b₀+4b₁+2b₂+b₃. Its
+    hyperplanes are md5 fractions (md5_hyperplanes), replayable in ANSI
+    SQL, so DuckDB recomputes signatures, banding, collision AND
+    verification exactly.
     """
     first = embeddings.select(F.size("embedding").alias("d")).first()
     if first is None:
@@ -642,22 +627,9 @@ def cosine_pairs_lsh_md5(
             F.col("embedding"), F.col("planes_mat")
         ).alias("sig"),
     )
-    buckets = sig.select(
-        "vec_id",
-        F.explode(_band_bucket_expr(bands, bits_per_band)).alias("bb"),
-    ).select("vec_id", "bb.band", "bb.bucket")
-
-    a, b = buckets.alias("a"), buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-        .distinct()
-    )
+    candidates = band_pairs(
+        sig, "vec_id", _band_bucket_expr(bands, bits_per_band)
+    ).select(F.col("vec_id_a").alias("id_a"), F.col("vec_id_b").alias("id_b"))
     ea = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a"))
     eb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b"))
     return (
@@ -733,6 +705,8 @@ def knn_lsh_md5(
 
     qb = with_buckets(queries, "query_id")
     cb = with_buckets(embeddings, "neighbor_id")
+    # not dedup.band_pairs: the query side is broadcast, and a pair is
+    # query_id != neighbor_id across two frames, not a self-join order
     candidates = (
         F.broadcast(qb)
         .join(
@@ -1508,7 +1482,6 @@ def embedding_outliers(
 
 
 PCA_Q_SCALE = 1_000_000  # coordinate fixed-point (1e-6 quantization)
-PCA_C_SCALE = 10**9  # covariance-entry fixed-point
 PCA_V_SCALE = 10**8  # component fixed-point per iteration
 PCA_ITERS = 30
 

@@ -298,29 +298,18 @@ def q_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.struct(F.lit(i).alias("band"), F.col(f"b{i}").alias("bucket"))
         for i in range(4)
     ]
-    buckets = sig.select(
-        "doc_id", "b0", "b1", "b2", "b3",
-        F.explode(F.array(*band_cols)).alias("bb"),
-    ).select("doc_id", "b0", "b1", "b2", "b3", "bb.band", "bb.bucket")
-    a, b = buckets.alias("a"), buckets.alias("b")
     hamming = sum(
-        F.bit_count(F.col(f"a.b{i}").bitwiseXOR(F.col(f"b.b{i}")))
+        F.bit_count(F.col(f"b{i}_a").bitwiseXOR(F.col(f"b{i}_b")))
         for i in range(4)
     )
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        D.band_pairs(sig, "doc_id", F.array(*band_cols), "b0", "b1", "b2", "b3")
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+            F.col("doc_id_a").alias("doc_a"),
+            F.col("doc_id_b").alias("doc_b"),
             hamming.cast("int").alias("hamming"),
         )
         .filter(F.col("hamming") <= AHASH_MAX_HAMMING)
-        .distinct()
     )
 
 @register(
@@ -506,29 +495,18 @@ def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.struct(F.lit(i).alias("band"), F.col(f"b{i}").alias("bucket"))
         for i in range(3)
     ]
-    buckets = sig.select(
-        "doc_id", "b0", "b1", "b2",
-        F.explode(F.array(*band_cols)).alias("bb"),
-    ).select("doc_id", "b0", "b1", "b2", "bb.band", "bb.bucket")
-    a, b = buckets.alias("a"), buckets.alias("b")
     hamming = sum(
-        F.bit_count(F.col(f"a.b{i}").bitwiseXOR(F.col(f"b.b{i}")))
+        F.bit_count(F.col(f"b{i}_a").bitwiseXOR(F.col(f"b{i}_b")))
         for i in range(3)
     )
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        D.band_pairs(sig, "doc_id", F.array(*band_cols), "b0", "b1", "b2")
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+            F.col("doc_id_a").alias("doc_a"),
+            F.col("doc_id_b").alias("doc_b"),
             hamming.cast("int").alias("hamming"),
         )
         .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
-        .distinct()
     )
 
 

@@ -47,14 +47,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor: TPC-H
-# fixes region at 5 rows and nation at 25 rows regardless of sf. Every
-# other table (customer, supplier, part, orders, lineitem, events,
-# documents, embeddings) grows linearly with sf, so forcing a broadcast
-# would OOM at large scale — their join strategy is left to AQE +
-# spark.sql.autoBroadcastJoinThreshold, which measure actual size.
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
 
 # The confs Spark's parquet footer-to-schema conversion and schema merge
 # read: the same bytes infer a different schema when any of them differs.

@@ -382,6 +382,20 @@ def test_streams_reach_the_driver_through_one_drain():
     ]
 
 
+def test_banded_candidate_joins_go_through_band_pairs():
+    """The (band, bucket) self-join is built once, in
+    operators.dedup.band_pairs: a new LSH or Hamming operator reuses it
+    instead of joining on its own "a.band" column. The oracle SQL's
+    unquoted `a.band` is DuckDB text, not a Spark join."""
+    pkg = Path(__file__).resolve().parents[1] / "kafka_streams_homework_spark"
+    ref = re.compile(r"""["']a\.band["']""")
+    assert sorted(
+        path.relative_to(pkg).as_posix()
+        for path in pkg.rglob("*.py")
+        if ref.search(path.read_text())
+    ) == ["operators/dedup.py"]
+
+
 def test_spread_reads_the_width_without_running_a_job(spark, sf_dir):
     """Under AQE, `df.rdd` on a frame with an exchange runs that
     exchange. spread reads the width from the plan instead: spreading a

@@ -1743,9 +1743,10 @@ def test_minhash_md5_matches_bruteforce(spark):
 
 
 def test_embedding_lsh_md5_matches_bruteforce(spark):
-    """cosine_pairs_lsh_md5 ≡ plain-Python replay of the md5-plane
-    sign-LSH pipeline (planes, bits, 4-bit band buckets, cosine
-    verify) on a small synthetic set."""
+    """cosine_pairs_lsh_md5 and cosine_pairs_lsh ≡ plain-Python replay
+    of the sign-LSH pipeline (planes, bits, 4-bit band buckets, cosine
+    verify) on a small synthetic set: md5 planes with the 1e-9 rounding
+    nudge, and seed-42 Gaussian planes without it."""
     import math
     from kafka_streams_homework_spark.operators import similarity as S
 
@@ -1759,40 +1760,42 @@ def test_embedding_lsh_md5_matches_bruteforce(spark):
                                for d in range(dim)])]
         vecs.append((i, [float(x) for x in base]))
 
-    planes = S.md5_hyperplanes(dim, bands * bits)
-
-    def sig(v):
-        return [1 if sum(a * b for a, b in zip(v, h)) >= 0 else 0
-                for h in planes]
-
     def cos(u, v):
         dot = sum(a * b for a, b in zip(u, v))
         return dot / (math.sqrt(sum(a * a for a in u))
                       * math.sqrt(sum(b * b for b in v)))
 
-    sigs = {i: sig(v) for i, v in vecs}
-    buckets = {}
-    for i, s in sigs.items():
-        for b in range(bands):
-            key = (b, sum(s[b * bits + r] << (bits - 1 - r)
-                          for r in range(bits)))
-            buckets.setdefault(key, []).append(i)
-    cand = {(a, b) for ids in buckets.values()
-            for a in ids for b in ids if a < b}
-    vd = dict(vecs)
-    expected = {
-        (a, b, round(cos(vd[a], vd[b]) + 1e-9, 6))
-        for a, b in cand
-        if round(cos(vd[a], vd[b]) + 1e-9, 6) >= 0.9
-    }
-    assert expected, "planted near-dups must produce pairs"
-
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    got = {
-        (r.id_a, r.id_b, r.sim)
-        for r in S.cosine_pairs_lsh_md5(df, 0.9, bands, bits).collect()
-    }
-    assert got == expected
+    for op, planes, nudge in (
+        (S.cosine_pairs_lsh_md5, S.md5_hyperplanes(dim, bands * bits), 1e-9),
+        (S.cosine_pairs_lsh, S.random_hyperplanes(dim, bands * bits, 42), 0.0),
+    ):
+        def sig(v):
+            return [1 if sum(a * b for a, b in zip(v, h)) >= 0 else 0
+                    for h in planes]
+
+        sigs = {i: sig(v) for i, v in vecs}
+        buckets = {}
+        for i, s in sigs.items():
+            for b in range(bands):
+                key = (b, sum(s[b * bits + r] << (bits - 1 - r)
+                              for r in range(bits)))
+                buckets.setdefault(key, []).append(i)
+        cand = {(a, b) for ids in buckets.values()
+                for a in ids for b in ids if a < b}
+        vd = dict(vecs)
+        expected = {
+            (a, b, round(cos(vd[a], vd[b]) + nudge, 6))
+            for a, b in cand
+            if round(cos(vd[a], vd[b]) + nudge, 6) >= 0.9
+        }
+        assert expected, "planted near-dups must produce pairs"
+
+        got = {
+            (r.id_a, r.id_b, r.sim)
+            for r in op(df, 0.9, bands, bits).collect()
+        }
+        assert got == expected, op.__name__
 
 
 def test_survival_km_known_values(spark):

@@ -11,7 +11,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from kafka_streams_homework_spark.operators import dedup as D
@@ -390,6 +390,54 @@ def test_simhash_md5_banding_is_complete(spark, docs):
     }
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {(r.doc_a, r.doc_b) for r in D.simhash_pairs_md5(df, 3, 3).collect()}
+    assert got == expected
+
+
+# signature rows: unique ids, three bands whose buckets come from a tiny
+# range (so pairs collide in several bands, and the same value recurs
+# across bands) with nulls, and two carried columns
+band_rows = st.lists(
+    st.tuples(
+        st.integers(0, 30),
+        st.lists(st.one_of(st.none(), st.integers(0, 2)), min_size=3, max_size=3),
+        st.integers(-5, 5),
+    ),
+    max_size=10,
+    unique_by=lambda r: r[0],
+)
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(band_rows)
+@example([])
+def test_band_pairs_equals_bruteforce(spark, rows):
+    """band_pairs ≡ every id_a < id_b pair that shares a non-null bucket
+    in the SAME band, listed once, with both rows' carried columns."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [(i, bk, w, f"t{i}") for i, bk, w in rows],
+        "id long, bk array<long>, w long, tag string",
+    )
+    keys = F.array(
+        *[F.struct(F.lit(b).alias("band"), F.col("bk")[b].alias("bucket")) for b in range(3)]
+    )
+    got = sorted(
+        tuple(r)
+        for r in D.band_pairs(df, "id", keys, "w", "tag")
+        .select("id_a", "w_a", "tag_a", "id_b", "w_b", "tag_b")
+        .collect()
+    )
+    expected = sorted(
+        (a, wa, f"t{a}", b, wb, f"t{b}")
+        for a, ka, wa in rows
+        for b, kb, wb in rows
+        if a < b and any(x is not None and x == y for x, y in zip(ka, kb))
+    )
     assert got == expected
 
 
