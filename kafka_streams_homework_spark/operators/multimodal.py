@@ -5,7 +5,10 @@ metadata alongside. The Spark-side contract is real and tested:
 
 - schema: (id, media_type, payload binary, meta struct)
 - decode/feature-extract runs as `mapInPandas` — Arrow-batched, one
-  Python worker per partition, never per-row;
+  Python worker per partition, never a Python call per Spark row. Every
+  per-row body (codec, synthesizer, per-document feature) goes through
+  `per_row`, the one batch loop; only whole-column pandas bodies
+  (`decode_stub`, `resize_thumbs`, `decode_and_resize`) keep their own;
 - every media class the engine models now has a REAL byte-level codec
   (rounds 5-6, no third-party libraries): audio = stdlib `wave`
   RIFF/PCM, image = zlib/CRC32 PNG + a general ITU T.81 baseline JPEG
@@ -37,6 +40,27 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+def per_row(df: DataFrame, cols: list[str], fn, schema) -> DataFrame:
+    """Run a per-row Python body over Arrow batches: the one
+    `mapInPandas` loop for row-at-a-time work.
+
+    Selects ``cols`` and calls ``fn(*row)`` on each row of each Arrow
+    batch. ``fn`` is a generator yielding zero or more output tuples in
+    ``schema``'s field order. A batch's tuples go back as one frame with
+    positional column labels: Spark assigns them to ``schema``'s fields
+    by position and casts each to its declared type, so callers write
+    neither column names nor dtypes. A batch that yields nothing is a
+    frame with no columns, which Spark reads as zero rows of ``schema``.
+    """
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = zip(*(pdf[c] for c in cols))
+            yield pd.DataFrame([out for row in rows for out in fn(*row)])
+
+    return df.select(*cols).mapInPandas(run, schema)
+
 
 DECODED_SCHEMA = StructType(
     [
@@ -117,26 +141,15 @@ def frame_sample(media: DataFrame) -> DataFrame:
     own binary column partitioned by doc_id, keeping the fanout narrow.
     """
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k.name: [] for k in FRAME_SCHEMA.fields}
-            for doc_id, mtype, payload in zip(
-                pdf["doc_id"], pdf["media_type"], pdf["payload"]
-            ):
-                n = len(payload)
-                n_frames = min(max(n // FRAME_SIZE, 1), MAX_FRAMES)
-                for i in range(n_frames):
-                    off = i * FRAME_SIZE
-                    out["doc_id"].append(doc_id)
-                    out["media_type"].append(mtype)
-                    out["frame_idx"].append(i)
-                    out["byte_offset"].append(off)
-                    out["frame_bytes"].append(min(FRAME_SIZE, n - off))
-            yield pd.DataFrame(out).astype(
-                {"frame_idx": "int32", "byte_offset": "int64", "frame_bytes": "int64"}
-            )
+    def sample(doc_id, mtype, payload):
+        n = len(payload)
+        for i in range(min(max(n // FRAME_SIZE, 1), MAX_FRAMES)):
+            off = i * FRAME_SIZE
+            yield doc_id, mtype, i, off, min(FRAME_SIZE, n - off)
 
-    return media.mapInPandas(sample, FRAME_SCHEMA)
+    return per_row(
+        media, ["doc_id", "media_type", "payload"], sample, FRAME_SCHEMA
+    )
 
 
 RESIZE_SCHEMA = StructType(
@@ -250,25 +263,19 @@ def audio_chunks(media: DataFrame) -> DataFrame:
     tails.
     """
 
-    def chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k.name: [] for k in CHUNK_SCHEMA.fields}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                for i in range(0, len(b), CHUNK_SIZE):
-                    c = b[i : i + CHUNK_SIZE]
-                    if len(c) < MIN_CHUNK:
-                        break
-                    out["doc_id"].append(doc_id)
-                    out["chunk_idx"].append(i // CHUNK_SIZE)
-                    out["n_bytes"].append(len(c))
-                    out["chunk"].append(c)
-            yield pd.DataFrame(out).astype(
-                {"chunk_idx": "int32", "n_bytes": "int64"}
-            )
+    def chunk(doc_id, payload):
+        b = bytes(payload)
+        for i in range(0, len(b), CHUNK_SIZE):
+            c = b[i : i + CHUNK_SIZE]
+            if len(c) < MIN_CHUNK:
+                break
+            yield doc_id, i // CHUNK_SIZE, len(c), c
 
-    return media.filter(F.col("media_type") == "audio/wav").mapInPandas(
-        chunk, CHUNK_SCHEMA
+    return per_row(
+        media.filter(F.col("media_type") == "audio/wav"),
+        ["doc_id", "payload"],
+        chunk,
+        CHUNK_SCHEMA,
     )
 
 
@@ -295,6 +302,23 @@ WAV_FEATURES_SCHEMA = StructType(
 )
 
 
+def _wav_bytes(signal) -> bytes:
+    """A PCM16 mono WAV at WAV_SR of a float ``signal``, quantized
+    round-half-up (floor(x + 0.5)) so every byte is closed-form."""
+    import io
+    import wave as wavmod
+
+    import numpy as np
+
+    buf = io.BytesIO()
+    with wavmod.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(WAV_SR)
+        w.writeframes(np.floor(signal + 0.5).astype("<i2").tobytes())
+    return buf.getvalue()
+
+
 def synth_wav(documents: DataFrame) -> DataFrame:
     """Synthesize a REAL PCM16 mono WAV per document (stdlib `wave`).
 
@@ -306,35 +330,14 @@ def synth_wav(documents: DataFrame) -> DataFrame:
     SQL even though DuckDB cannot parse RIFF. The payloads are true
     WAV files (RIFF header, fmt/data chunks) playable by any reader.
     """
-    import io
-    import wave as wavmod
-
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n_per = 1 + d % 50
-                amp = 1000 + (d % 20) * 1000
-                k = np.arange(WAV_PERIOD * n_per, dtype="float64")
-                samples = np.floor(
-                    amp * np.sin(2.0 * np.pi * k / WAV_PERIOD) + 0.5
-                ).astype("<i2")
-                buf = io.BytesIO()
-                w = wavmod.open(buf, "wb")
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(WAV_SR)
-                w.writeframes(samples.tobytes())
-                w.close()
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def gen(doc_id):
+        amp = 1000 + (doc_id % 20) * 1000
+        k = np.arange(WAV_PERIOD * (1 + doc_id % 50), dtype="float64")
+        yield doc_id, _wav_bytes(amp * np.sin(2.0 * np.pi * k / WAV_PERIOD))
 
-    return documents.select("doc_id").mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return per_row(documents, ["doc_id"], gen, "doc_id long, payload binary")
 
 
 def wav_decode(media: DataFrame) -> DataFrame:
@@ -352,33 +355,16 @@ def wav_decode(media: DataFrame) -> DataFrame:
 
     import numpy as np
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "n_channels": [], "sample_rate": [],
-                "n_frames": [], "duration_ms": [], "peak": [], "rms": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w = wavmod.open(io.BytesIO(bytes(payload)))
-                nch, sr, nf = (
-                    w.getnchannels(), w.getframerate(), w.getnframes(),
-                )
-                data = np.frombuffer(
-                    w.readframes(nf), dtype="<i2"
-                ).astype("float64")
-                out["doc_id"].append(doc_id)
-                out["n_channels"].append(nch)
-                out["sample_rate"].append(sr)
-                out["n_frames"].append(nf)
-                out["duration_ms"].append(nf * 1000.0 / sr)
-                out["peak"].append(int(np.max(np.abs(data))))
-                out["rms"].append(float(np.sqrt(np.mean(data * data))))
-            yield pd.DataFrame(out).astype(
-                {"n_channels": "int32", "sample_rate": "int32",
-                 "n_frames": "int64", "peak": "int32"}
-            )
+    def dec(doc_id, payload):
+        w = wavmod.open(io.BytesIO(bytes(payload)))
+        nch, sr, nf = w.getnchannels(), w.getframerate(), w.getnframes()
+        data = np.frombuffer(w.readframes(nf), dtype="<i2").astype("float64")
+        yield (
+            doc_id, nch, sr, nf, nf * 1000.0 / sr,
+            int(np.max(np.abs(data))), float(np.sqrt(np.mean(data * data))),
+        )
 
-    return media.mapInPandas(dec, WAV_FEATURES_SCHEMA)
+    return per_row(media, ["doc_id", "payload"], dec, WAV_FEATURES_SCHEMA)
 
 
 def synth_wav_bursty(documents: DataFrame) -> DataFrame:
@@ -396,39 +382,19 @@ def synth_wav_bursty(documents: DataFrame) -> DataFrame:
     energy == 4r² + 2a² exactly for all amp/quiet-amp pairs), which
     is what lets `audio_vad`'s segments be oracle-hash-checked.
     """
-    import io
-    import wave as wavmod
-
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n_fr = 1 + d % 50
-                amp = 1000 + (d % 20) * 1000
-                per, duty = 3 + d % 3, 1 + d % 2
-                j = np.arange(n_fr)
-                amps = np.where((j % per) < duty, amp, amp // 16)
-                k = np.arange(WAV_PERIOD * n_fr, dtype="float64")
-                gain = np.repeat(amps, WAV_PERIOD).astype("float64")
-                samples = np.floor(
-                    gain * np.sin(2.0 * np.pi * k / WAV_PERIOD) + 0.5
-                ).astype("<i2")
-                buf = io.BytesIO()
-                w = wavmod.open(buf, "wb")
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(WAV_SR)
-                w.writeframes(samples.tobytes())
-                w.close()
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def gen(doc_id):
+        n_fr = 1 + doc_id % 50
+        amp = 1000 + (doc_id % 20) * 1000
+        per, duty = 3 + doc_id % 3, 1 + doc_id % 2
+        j = np.arange(n_fr)
+        amps = np.where((j % per) < duty, amp, amp // 16)
+        k = np.arange(WAV_PERIOD * n_fr, dtype="float64")
+        gain = np.repeat(amps, WAV_PERIOD).astype("float64")
+        yield doc_id, _wav_bytes(gain * np.sin(2.0 * np.pi * k / WAV_PERIOD))
 
-    return documents.select("doc_id").mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return per_row(documents, ["doc_id"], gen, "doc_id long, payload binary")
 
 
 WAV_FRAME_SCHEMA = (
@@ -441,43 +407,26 @@ def wav_frame_energy(media: DataFrame) -> DataFrame:
     decoded int16 PCM into 8-sample frames, and emit one row per frame
     with its exact integer energy (sum of squared samples — int64 is
     exact: |x| <= 20000, 8 samples) plus the clip peak for
-    self-referential thresholding. The frame fan-out happens inside
-    the Arrow batch (numpy reshape, no per-row Python), and the
-    payload bytes never shuffle — only the small (doc, frame, energy)
-    rows leave the stage.
+    self-referential thresholding. The frames come from one numpy
+    reshape per payload inside the Arrow batch, and the payload bytes
+    never shuffle — only the small (doc, frame, energy) rows leave the
+    stage.
     """
     import io
     import wave as wavmod
 
     import numpy as np
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "frame_idx": [], "energy": [], "peak": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w = wavmod.open(io.BytesIO(bytes(payload)))
-                nf = w.getnframes()
-                data = np.frombuffer(
-                    w.readframes(nf), dtype="<i2"
-                ).astype("int64")
-                frames = data[: (nf // WAV_PERIOD) * WAV_PERIOD].reshape(
-                    -1, WAV_PERIOD
-                )
-                energy = (frames * frames).sum(axis=1)
-                peak = int(np.max(np.abs(data))) if nf else 0
-                n = frames.shape[0]
-                out["doc_id"].extend([doc_id] * n)
-                out["frame_idx"].extend(range(n))
-                out["energy"].extend(energy.tolist())
-                out["peak"].extend([peak] * n)
-            yield pd.DataFrame(out).astype(
-                {"doc_id": "int64", "frame_idx": "int64",
-                 "energy": "int64", "peak": "int64"}
-            )
+    def dec(doc_id, payload):
+        w = wavmod.open(io.BytesIO(bytes(payload)))
+        nf = w.getnframes()
+        data = np.frombuffer(w.readframes(nf), dtype="<i2").astype("int64")
+        frames = data[: (nf // WAV_PERIOD) * WAV_PERIOD].reshape(-1, WAV_PERIOD)
+        peak = int(np.max(np.abs(data))) if nf else 0
+        for i, energy in enumerate((frames * frames).sum(axis=1).tolist()):
+            yield doc_id, i, energy, peak
 
-    return media.mapInPandas(dec, WAV_FRAME_SCHEMA)
+    return per_row(media, ["doc_id", "payload"], dec, WAV_FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -638,22 +587,12 @@ def synth_png(documents: DataFrame) -> DataFrame:
     lateral range() grid, even though DuckDB cannot inflate PNGs.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 16 + d % 16, 16 + d % 8
-                px = [
-                    [(7 * x + 13 * y + d) % 256 for x in range(w)]
-                    for y in range(h)
-                ]
-                payloads.append(encode_png_gray8(px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def gen(doc_id):
+        w, h = 16 + doc_id % 16, 16 + doc_id % 8
+        px = [[(7 * x + 13 * y + doc_id) % 256 for x in range(w)] for y in range(h)]
+        yield doc_id, encode_png_gray8(px)
 
-    return documents.select("doc_id").mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return per_row(documents, ["doc_id"], gen, "doc_id long, payload binary")
 
 
 def png_decode(media: DataFrame) -> DataFrame:
@@ -662,27 +601,27 @@ def png_decode(media: DataFrame) -> DataFrame:
     bitmap (integer-exact float64 sum / (W*H) — bit-identical to the
     oracle's integer avg)."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "bit_depth": [], "color_type": [], "mean_pixel": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, depth, ctype, px = decode_png_gray8(bytes(payload))
-                total = sum(sum(r) for r in px)
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["bit_depth"].append(depth)
-                out["color_type"].append(ctype)
-                out["mean_pixel"].append(total / (w * h))
-            yield pd.DataFrame(out).astype(
-                {"width": "int32", "height": "int32",
-                 "bit_depth": "int32", "color_type": "int32"}
-            )
+    def dec(doc_id, payload):
+        w, h, depth, ctype, px = decode_png_gray8(bytes(payload))
+        yield doc_id, w, h, depth, ctype, sum(sum(r) for r in px) / (w * h)
 
-    return media.mapInPandas(dec, PNG_FEATURES_SCHEMA)
+    return per_row(media, ["doc_id", "payload"], dec, PNG_FEATURES_SCHEMA)
+
+
+def _block_pool(px, w: int, h: int):
+    """8x8 block sums and pixel counts of a decoded bitmap: pixel (x, y)
+    joins block (x*8//w, y*8//h) — an exact integer partition, no
+    resampler. Returns (bsum, npix), each 8 rows of 8."""
+    bsum = [[0] * 8 for _ in range(8)]
+    npix = [[0] * 8 for _ in range(8)]
+    for y in range(h):
+        row = px[y]
+        by = y * 8 // h
+        for x in range(w):
+            bx = x * 8 // w
+            bsum[by][bx] += row[x]
+            npix[by][bx] += 1
+    return bsum, npix
 
 
 def png_ahash(media: DataFrame) -> DataFrame:
@@ -702,46 +641,23 @@ def png_ahash(media: DataFrame) -> DataFrame:
     closed-form synth formula without inflating a byte.
     """
 
-    def ah(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "b0": [], "b1": [], "b2": [], "b3": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _depth, _ctype, px = decode_png_gray8(bytes(payload))
-                bsum = [[0] * 8 for _ in range(8)]
-                npix = [[0] * 8 for _ in range(8)]
-                total = 0
-                for y in range(h):
-                    row = px[y]
-                    by = y * 8 // h
-                    for x in range(w):
-                        bx = x * 8 // w
-                        bsum[by][bx] += row[x]
-                        npix[by][bx] += 1
-                        total += row[x]
-                bands = [0, 0, 0, 0]
-                area = w * h
-                for by in range(8):
-                    for bx in range(8):
-                        if bsum[by][bx] * area >= total * npix[by][bx]:
-                            bit = by * 8 + bx
-                            bands[bit // 16] |= 1 << (bit % 16)
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                for i in range(4):
-                    out[f"b{i}"].append(bands[i])
-            yield pd.DataFrame(out).astype(
-                {"width": "int32", "height": "int32", "b0": "int64",
-                 "b1": "int64", "b2": "int64", "b3": "int64"}
-            )
+    def ah(doc_id, payload):
+        w, h, _depth, _ctype, px = decode_png_gray8(bytes(payload))
+        bsum, npix = _block_pool(px, w, h)
+        total = sum(map(sum, bsum))
+        bands = [0, 0, 0, 0]
+        for by in range(8):
+            for bx in range(8):
+                if bsum[by][bx] * (w * h) >= total * npix[by][bx]:
+                    bit = by * 8 + bx
+                    bands[bit // 16] |= 1 << (bit % 16)
+        yield doc_id, w, h, *bands
 
-    return media.mapInPandas(
+    return per_row(
+        media,
+        ["doc_id", "payload"],
         ah,
-        "doc_id long, width int, height int, "
-        "b0 long, b1 long, b2 long, b3 long",
+        "doc_id long, width int, height int, b0 long, b1 long, b2 long, b3 long",
     )
 
 
@@ -1079,6 +995,19 @@ JPEG_FEATURES_SCHEMA = StructType(
 )
 
 
+def _block_image(d: int, f: int) -> list[list[int]]:
+    """Frame ``f`` of doc ``d``'s block-constant even-valued image
+    (JPEG_BLOCKS_W x JPEG_BLOCKS_H blocks of 8x8): block (by, bx) holds
+    2 * ((d*31 + f*11 + by*7 + bx*13) % 128)."""
+    return [
+        [
+            2 * ((d * 31 + f * 11 + (y // 8) * 7 + (x // 8) * 13) % 128)
+            for x in range(JPEG_BLOCKS_W * 8)
+        ]
+        for y in range(JPEG_BLOCKS_H * 8)
+    ]
+
+
 def synth_jpeg(documents: DataFrame) -> DataFrame:
     """Synthesize a REAL baseline JPEG per document.
 
@@ -1095,63 +1024,22 @@ def synth_jpeg(documents: DataFrame) -> DataFrame:
     special-cased; the lossy general path is pinned in pytest with
     gradient/noise images instead.
     """
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                img = [
-                    [
-                        2 * ((d * 31 + (y // 8) * 7 + (x // 8) * 13) % 128)
-                        for x in range(JPEG_BLOCKS_W * 8)
-                    ]
-                    for y in range(JPEG_BLOCKS_H * 8)
-                ]
-                rows.append((d, encode_jpeg_gray_baseline(img)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def gen(doc_id):
+        yield doc_id, encode_jpeg_gray_baseline(_block_image(doc_id, 0))
 
-    return documents.select("doc_id").mapInPandas(gen, out_schema)
+    return per_row(documents, ["doc_id"], gen, "doc_id long, payload binary")
 
 
 def jpeg_decode(media: DataFrame) -> DataFrame:
     """Decode real JPEG payloads (Arrow-batched; linear per-byte CPU)."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, pix = decode_jpeg_gray_baseline(bytes(payload))
-                flat = [v for row in pix for v in row]
-                rows.append(
-                    (
-                        int(doc_id),
-                        w,
-                        h,
-                        sum(flat) / len(flat),
-                        min(flat),
-                        max(flat),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "mean_pixel",
-                    "min_pixel",
-                    "max_pixel",
-                ],
-            )
+    def dec(doc_id, payload):
+        w, h, pix = decode_jpeg_gray_baseline(bytes(payload))
+        flat = [v for row in pix for v in row]
+        yield doc_id, w, h, sum(flat) / len(flat), min(flat), max(flat)
 
-    return media.mapInPandas(dec, JPEG_FEATURES_SCHEMA)
+    return per_row(media, ["doc_id", "payload"], dec, JPEG_FEATURES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1303,69 +1191,30 @@ def synth_video(documents: DataFrame) -> DataFrame:
     pattern by 11*f), muxed by the RIFF writer. Frame pixels stay
     closed-form, so the decoded per-frame means are SQL-recomputable
     (the jpeg_pipeline losslessness argument, per frame)."""
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
+
+    def gen(doc_id):
+        frames = [
+            encode_jpeg_gray_baseline(_block_image(doc_id, f))
+            for f in range(VIDEO_N_FRAMES)
         ]
-    )
+        yield doc_id, encode_mjpeg_avi(frames, JPEG_BLOCKS_W * 8, JPEG_BLOCKS_H * 8)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                frames = []
-                for f in range(VIDEO_N_FRAMES):
-                    img = [
-                        [
-                            2 * ((d * 31 + f * 11 + (y // 8) * 7
-                                  + (x // 8) * 13) % 128)
-                            for x in range(JPEG_BLOCKS_W * 8)
-                        ]
-                        for y in range(JPEG_BLOCKS_H * 8)
-                    ]
-                    frames.append(encode_jpeg_gray_baseline(img))
-                rows.append(
-                    (d, encode_mjpeg_avi(frames, JPEG_BLOCKS_W * 8,
-                                         JPEG_BLOCKS_H * 8))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return documents.select("doc_id").mapInPandas(gen, out_schema)
+    return per_row(documents, ["doc_id"], gen, "doc_id long, payload binary")
 
 
 def video_decode(media: DataFrame) -> DataFrame:
     """Demux + decode real MJPEG AVIs (Arrow-batched)."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, fps, frames = decode_mjpeg_avi(bytes(payload))
-                flat0 = [v for row in frames[0] for v in row]
-                flatn = [v for row in frames[-1] for v in row]
-                rows.append(
-                    (
-                        int(doc_id),
-                        w,
-                        h,
-                        len(frames),
-                        fps,
-                        1000.0 * len(frames) / fps,
-                        sum(flat0) / len(flat0),
-                        sum(flatn) / len(flatn),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_frames", "fps",
-                    "duration_ms", "mean_first", "mean_last",
-                ],
-            )
+    def dec(doc_id, payload):
+        w, h, fps, frames = decode_mjpeg_avi(bytes(payload))
+        flat0 = [v for row in frames[0] for v in row]
+        flatn = [v for row in frames[-1] for v in row]
+        yield (
+            doc_id, w, h, len(frames), fps, 1000.0 * len(frames) / fps,
+            sum(flat0) / len(flat0), sum(flatn) / len(flatn),
+        )
 
-    return media.mapInPandas(dec, VIDEO_FEATURES_SCHEMA)
+    return per_row(media, ["doc_id", "payload"], dec, VIDEO_FEATURES_SCHEMA)
 
 
 # Fixed-point DCT-II basis shared with the oracle SQL: c[u][x] =
@@ -1401,53 +1250,36 @@ def png_phash(media: DataFrame) -> DataFrame:
     O(n^2).
     """
 
-    def ph(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "b0": [], "b1": [], "b2": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _depth, _ctype, px = decode_png_gray8(bytes(payload))
-                bsum = [[0] * 8 for _ in range(8)]
-                npix = [[0] * 8 for _ in range(8)]
-                for y in range(h):
-                    row = px[y]
-                    by = y * 8 // h
-                    for x in range(w):
-                        bx = x * 8 // w
-                        bsum[by][bx] += row[x]
-                        npix[by][bx] += 1
-                bmean = [
-                    [bsum[by][bx] // npix[by][bx] for bx in range(8)]
-                    for by in range(8)
-                ]
-                coefs = []
-                for u in range(6):
-                    bu = DCT_BASIS[u]
-                    for v in range(6):
-                        if u == 0 and v == 0:
-                            continue
-                        bv = DCT_BASIS[v]
-                        c = 0
-                        for y in range(8):
-                            row_m = bmean[y]
-                            cy = bu[y]
-                            for x in range(8):
-                                c += row_m[x] * cy * bv[x]
-                        coefs.append(c)
-                med = sorted(coefs)[17]
-                bands = [0, 0, 0]
-                for idx, c in enumerate(coefs):
-                    if c > med:
-                        bands[idx // 12] |= 1 << (idx % 12)
-                out["doc_id"].append(doc_id)
-                for i in range(3):
-                    out[f"b{i}"].append(bands[i])
-            yield pd.DataFrame(out).astype(
-                {"b0": "int64", "b1": "int64", "b2": "int64"}
-            )
+    def ph(doc_id, payload):
+        w, h, _depth, _ctype, px = decode_png_gray8(bytes(payload))
+        bsum, npix = _block_pool(px, w, h)
+        bmean = [
+            [bsum[by][bx] // npix[by][bx] for bx in range(8)] for by in range(8)
+        ]
+        coefs = []
+        for u in range(6):
+            bu = DCT_BASIS[u]
+            for v in range(6):
+                if u == 0 and v == 0:
+                    continue
+                bv = DCT_BASIS[v]
+                c = 0
+                for y in range(8):
+                    row_m = bmean[y]
+                    cy = bu[y]
+                    for x in range(8):
+                        c += row_m[x] * cy * bv[x]
+                coefs.append(c)
+        med = sorted(coefs)[17]
+        bands = [0, 0, 0]
+        for idx, c in enumerate(coefs):
+            if c > med:
+                bands[idx // 12] |= 1 << (idx % 12)
+        yield doc_id, *bands
 
-    return media.mapInPandas(ph, "doc_id long, b0 long, b1 long, b2 long")
+    return per_row(
+        media, ["doc_id", "payload"], ph, "doc_id long, b0 long, b1 long, b2 long"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1644,22 +1476,12 @@ def synth_gif(documents: DataFrame) -> DataFrame:
     lateral range() grid even though DuckDB cannot run LZW.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 24, 8 + d % 16
-                px = [
-                    [(11 * x + 5 * y + 3 * d) % 256 for x in range(w)]
-                    for y in range(h)
-                ]
-                payloads.append(encode_gif_gray8(px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def gen(doc_id):
+        w, h = 8 + doc_id % 24, 8 + doc_id % 16
+        px = [[(11 * x + 5 * y + 3 * doc_id) % 256 for x in range(w)] for y in range(h)]
+        yield doc_id, encode_gif_gray8(px)
 
-    return documents.select("doc_id").mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return per_row(documents, ["doc_id"], gen, "doc_id long, payload binary")
 
 
 def gif_decode(media: DataFrame) -> DataFrame:
@@ -1667,22 +1489,8 @@ def gif_decode(media: DataFrame) -> DataFrame:
     from the reconstructed bitmap itself (Arrow-batched, payload
     never shuffles)."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "n_pixels": [], "mean_pixel": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, px = decode_gif_gray8(bytes(payload))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["mean_pixel"].append(sum(px) / (w * h))
-            yield pd.DataFrame(out).astype(
-                {"doc_id": "int64", "width": "int32", "height": "int32",
-                 "n_pixels": "int64"}
-            )
+    def dec(doc_id, payload):
+        w, h, px = decode_gif_gray8(bytes(payload))
+        yield doc_id, w, h, w * h, sum(px) / (w * h)
 
-    return media.mapInPandas(dec, GIF_FEATURES_SCHEMA)
+    return per_row(media, ["doc_id", "payload"], dec, GIF_FEATURES_SCHEMA)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_streams_homework_spark.operators.multimodal import per_row
+
 # ---------------------------------------------------------------------------
 # S2/S4 — latest value per key (GlobalKTable semantics)
 # ---------------------------------------------------------------------------
@@ -970,7 +972,7 @@ def dtw_pairs(
     The DP recurrence dtw[i][j] = |x_i - y_j| + min(dtw[i-1][j],
     dtw[i-1][j-1], dtw[i][j-1]) is a 2-D NON-associative recurrence no
     window/scan expresses — like ``holt_smooth`` it runs through the
-    Arrow-batched escape hatch (``mapInPandas``), but on the PAIRED
+    Arrow-batched escape hatch (``multimodal.per_row``), but on the PAIRED
     series table: upstream aggregation collapses the corpus to one
     array row per series (calendar-bounded), the pair join is
     |keys|^2/2 tiny rows, and each pair's O(n*m) loop touches only its
@@ -985,8 +987,6 @@ def dtw_pairs(
     """
     import math
 
-    import pandas as pd
-
     a = series.select(
         F.col(key_col).alias("type_a"), F.col(ys_col).alias("xs")
     )
@@ -996,35 +996,29 @@ def dtw_pairs(
     pairs = a.join(b, F.col("type_a") < F.col("type_b"))
     schema = "type_a string, type_b string, n_a long, n_b long, dtw double"
 
-    def compute(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                xs = [float(v) for v in r.xs]
-                ys = [float(v) for v in r.ys]
-                n, m = len(xs), len(ys)
-                if n == 0 or m == 0:
+    def compute(type_a, type_b, xs, ys):
+        xs = [float(v) for v in xs]
+        ys = [float(v) for v in ys]
+        n, m = len(xs), len(ys)
+        if n == 0 or m == 0:
+            return
+        inf = math.inf
+        dp_prev = None
+        for i in range(1, n + 1):
+            dp_cur = [0.0] * (m + 1)
+            for j in range(1, m + 1):
+                c = abs(xs[i - 1] - ys[j - 1])
+                if i == 1 and j == 1:
+                    dp_cur[j] = c
                     continue
-                inf = math.inf
-                dp_prev = None
-                for i in range(1, n + 1):
-                    dp_cur = [0.0] * (m + 1)
-                    for j in range(1, m + 1):
-                        c = abs(xs[i - 1] - ys[j - 1])
-                        if i == 1 and j == 1:
-                            dp_cur[j] = c
-                            continue
-                        up = dp_prev[j] if i > 1 else inf
-                        diag = dp_prev[j - 1] if (i > 1 and j > 1) else inf
-                        left = dp_cur[j - 1] if j > 1 else inf
-                        dp_cur[j] = c + min(up, diag, left)
-                    dp_prev = dp_cur
-                out.append((r.type_a, r.type_b, n, m, dp_prev[m]))
-            yield pd.DataFrame(
-                out, columns=["type_a", "type_b", "n_a", "n_b", "dtw"]
-            )
+                up = dp_prev[j] if i > 1 else inf
+                diag = dp_prev[j - 1] if (i > 1 and j > 1) else inf
+                left = dp_cur[j - 1] if j > 1 else inf
+                dp_cur[j] = c + min(up, diag, left)
+            dp_prev = dp_cur
+        yield type_a, type_b, n, m, dp_prev[m]
 
-    return pairs.mapInPandas(compute, schema)
+    return per_row(pairs, ["type_a", "type_b", "xs", "ys"], compute, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_homework_spark.caching import release_checkpoint, tracked_persist
 from kafka_streams_homework_spark.functions import count_in_set, tokens
+from kafka_streams_homework_spark.operators.multimodal import per_row
 from kafka_streams_homework_spark.session import bounded_loop
 
 # Stopword list for the heuristic language scorer. Tiny on purpose: the
@@ -712,27 +713,20 @@ def compression_ratio(documents: DataFrame) -> DataFrame:
     Deterministic for a given zlib build and level, but no SQL engine
     can replay DEFLATE, so this is a rows-only entry; its
     oracle-checked sandwich is char_entropy (a lower bound on the
-    achievable rate, asserted in pytest). Arrow-batched mapInPandas,
-    one Python crossing, no shuffle.
+    achievable rate, asserted in pytest). Arrow-batched through
+    `multimodal.per_row`, one Python crossing, no shuffle.
     """
     import zlib
-    from typing import Iterator
 
-    import pandas as pd
+    def comp(doc_id, text):
+        raw = str(text).encode("utf-8")
+        yield doc_id, len(raw), len(zlib.compress(raw, COMPRESSION_LEVEL))
 
-    def comp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "raw_bytes": [], "compressed_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")
-                cz = zlib.compress(raw, COMPRESSION_LEVEL)
-                out["doc_id"].append(doc_id)
-                out["raw_bytes"].append(len(raw))
-                out["compressed_bytes"].append(len(cz))
-            yield pd.DataFrame(out)
-
-    feats = documents.select("doc_id", "text").mapInPandas(
-        comp, "doc_id long, raw_bytes long, compressed_bytes long"
+    feats = per_row(
+        documents,
+        ["doc_id", "text"],
+        comp,
+        "doc_id long, raw_bytes long, compressed_bytes long",
     )
     ratio = F.round(
         F.col("compressed_bytes") / F.col("raw_bytes") + F.lit(1e-9), 6

@@ -162,8 +162,8 @@ def q_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on-sample at 8 samples/period; round-half-up quantization makes "
     "every byte closed-form; integer-exact float64 sums make the RMS "
     "bit-identical) — a full hash check of a genuine codec round-trip. "
-    "Closes the audio leg of the decode_real gate "
-    "(operators/multimodal.py:271); image/video stay gated on PIL/cv2",
+    "The audio member of the real-codec family (png, jpeg, "
+    "mjpeg-avi and gif pipelines cover image and video)",
 )
 def q_wav_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
@@ -212,9 +212,8 @@ def q_wav_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Pixel(x,y) = (7x+13y+doc_id) % 256 is closed-form, so DuckDB "
     "recomputes the decoded mean pixel from a lateral range() grid "
     "without inflating a single byte: the hash check proves the "
-    "reconstructed bitmap is exact. With wav_pipeline this closes "
-    "the image leg of the decode_real gate "
-    "(operators/multimodal.py:271); video stays gated on cv2/av",
+    "reconstructed bitmap is exact. The lossless-image member of the "
+    "real-codec family with wav, jpeg, mjpeg-avi and gif",
 )
 def q_png_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
@@ -342,8 +341,8 @@ def q_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "recomputes every decoded pixel in integers from a 6-row block "
     "grid — the hash check proves the reconstruction bit-exact. The "
     "general lossy path (gradients, high-frequency noise, error "
-    "bounds) is pinned in pytest. decode_real now gates VIDEO only "
-    "(operators/multimodal.py:271)",
+    "bounds) is pinned in pytest; video_pipeline muxes these frames "
+    "into MJPEG-AVI",
 )
 def q_jpeg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
@@ -390,9 +389,9 @@ def q_jpeg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Even-valued block-constant frames make each frame's decode "
     "exactly lossless, so DuckDB recomputes per-frame means from a "
     "30-row (frame, block) grid — hash-checked. Inter-frame codecs "
-    "(H.264) remain a codec-library boundary, documented in "
-    "operators/multimodal.py decode_real; MJPEG is the intra-only "
-    "video class this engine models end-to-end",
+    "(H.264) remain a codec-library boundary, documented in the "
+    "operators/multimodal.py module docstring; MJPEG is the "
+    "intra-only video class this engine models end-to-end",
 )
 def q_video_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
@@ -634,7 +633,7 @@ def q_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is closed-form, so DuckDB recomputes the decoded mean pixel "
     "from a lateral range() grid without running LZW: the hash check "
     "proves the reconstructed bitmap is exact. Joins wav (RIFF/PCM), "
-    "png (zlib), jpeg (T.81) and mjpeg-avi in the decode_real "
+    "png (zlib), jpeg (T.81) and mjpeg-avi in the real-codec "
     "family; payload bytes never shuffle",
 )
 def q_gif_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

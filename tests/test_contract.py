@@ -396,6 +396,68 @@ def test_banded_candidate_joins_go_through_band_pairs():
     ) == ["operators/dedup.py"]
 
 
+# mapInPandas bodies that work on whole columns or carry state across a
+# partition's batches, so they are not per-row bodies for per_row
+WHOLE_COLUMN_BODIES = {
+    "multimodal.py:decode_stub": "length arithmetic on the payload column",
+    "multimodal.py:resize_thumbs": "pandas clip/max over the width and height columns",
+    "multimodal.py:decode_and_resize": "decode_stub and resize_thumbs on one column pass",
+    "sketches.py:heavy_hitters": "Misra-Gries counters kept across a partition's batches",
+    "sketches.py:kmv_distinct": "k smallest hashes per group kept across batches",
+    "similarity.py:_pq_encode_nested": "one numpy argmin per sub-space over a batch",
+}
+
+
+def test_per_row_bodies_go_through_per_row():
+    """A per-row Python body runs through operators.multimodal.per_row:
+    `mapInPandas(` appears in operators/ only there and in the named
+    whole-column bodies, so a new codec or per-document feature cannot
+    grow its own batch loop, column lists and dtype casts."""
+    import ast
+
+    ops = Path(__file__).resolve().parents[1] / "kafka_streams_homework_spark" / "operators"
+    sites = sorted(
+        f"{path.name}:{getattr(top, 'name', '<module>')}"
+        for path in ops.glob("*.py")
+        for top in ast.parse(path.read_text()).body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call) and getattr(node.func, "attr", "") == "mapInPandas"
+    )
+    assert sites == sorted(["multimodal.py:per_row", *WHOLE_COLUMN_BODIES])
+
+
+def test_per_row_gives_the_declared_schema_and_the_replayed_rows(spark):
+    """per_row on an empty input, on partitions whose rows yield nothing,
+    and on row functions yielding 0, 1 and N rows: exactly the declared
+    schema, types included, and the rows a plain-Python replay gives."""
+    from kafka_streams_homework_spark.operators import multimodal as M
+
+    schema = "k long, i int, tag string, x double, b binary"
+    ddl = "struct<k:bigint,i:int,tag:string,x:double,b:binary>"
+
+    def fan(k):
+        # k in 0..2 and 9..11 yield nothing, 3..5 one row, 6..8 two rows
+        for i in range(k // 3 % 3):
+            yield k, i, f"t{k}", k / 2, bytes([k, i])
+
+    cases = {
+        "empty": (spark.createDataFrame([], "k long"), []),
+        "four partitions": (spark.range(0, 12, 1, 4).withColumnRenamed("id", "k"), range(12)),
+    }
+    for name, (df, ks) in cases.items():
+        out = M.per_row(df, ["k"], fan, schema)
+        assert out.schema.simpleString() == ddl, name
+        got = sorted((k, i, t, x, bytes(b)) for k, i, t, x, b in out.collect())
+        assert got == sorted(row for k in ks for row in fan(k)), name
+
+    docs = spark.createDataFrame(
+        [(2 * n, "x" * 300) for n in range(8)], "doc_id long, text string"
+    ).repartition(3)
+    chunks = M.audio_chunks(M.to_media(docs))  # every even doc_id is image/png
+    assert chunks.schema == M.CHUNK_SCHEMA
+    assert chunks.collect() == []
+
+
 def test_spread_reads_the_width_without_running_a_job(spark, sf_dir):
     """Under AQE, `df.rdd` on a frame with an exchange runs that
     exchange. spread reads the width from the plan instead: spreading a

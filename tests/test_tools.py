@@ -60,6 +60,13 @@ def test_tool_query_lists_name_registry_queries():
     assert len(bench.BENCH_QUERIES) == 180
 
 
+def test_query_catalog_matches_the_registry():
+    """QUERIES.md is tools/catalog.py's rendering of the registry; rerun
+    the tool after changing a query's name, oracle or description."""
+    catalog = _load("tools/catalog.py")
+    assert catalog.render() == (ROOT / "QUERIES.md").read_text()
+
+
 def test_qtime_layers_end_to_end(sf_dir, tmp_path):
     env = {**os.environ, "TMPDIR": str(tmp_path)}
     out = subprocess.run(

@@ -16,7 +16,11 @@ sys.path.insert(0, ROOT)
 from kafka_streams_homework_spark.queries import REGISTRY, WINDOW  # noqa: E402
 
 
-def main() -> None:
+QUERIES_MD = os.path.join(ROOT, "QUERIES.md")
+
+
+def render() -> str:
+    """QUERIES.md's text, from the registry as it is now."""
     lines = [
         "# QUERIES — the engine's public query surface "
         "(auto-generated by tools/catalog.py)\n",
@@ -33,11 +37,13 @@ def main() -> None:
         check = "oracle" if spec.oracle is not None else "rows"
         desc = " ".join(spec.description.split())
         lines.append(f"| {i} | `{name}` | {check} | {desc} |")
-    out = "\n".join(lines) + "\n"
-    path = os.path.join(ROOT, "QUERIES.md")
-    with open(path, "w") as f:
-        f.write(out)
-    print(f"wrote {path} ({len(REGISTRY)} queries)")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    with open(QUERIES_MD, "w") as f:
+        f.write(render())
+    print(f"wrote {QUERIES_MD} ({len(REGISTRY)} queries)")
 
 
 if __name__ == "__main__":
